@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Twitter-dump row cleanse (reference package.scala:80-93), rebuilt without
   * the driver round-trip: the reference collected suspect ids to the driver
   * and filtered with a literal `NOT IN` list — unbounded at 100 TB
-  * (SURVEY.md §3.4). Here the suspect set stays distributed as a left-anti
-  * join, preserving the reference's observable semantics exactly:
+  * (SURVEY.md §3.4). Here the suspect set stays distributed as ONE left-anti
+  * equi-join, preserving the reference's observable semantics exactly:
   *
   *   - rows whose `tweet_time` is null or doesn't match `yyyy-MM-dd HH:mm`
   *     are removed (including OTHER rows sharing the same tweetid — the
@@ -16,6 +16,23 @@ import org.apache.spark.sql.functions._
   *     (SQL three-valued `NOT IN` semantics, the property the reference's test
   *     actually certifies — ImportTest.scala:58-60; with zero suspect rows the
   *     reference skips the filter entirely and NULL ids survive).
+  *
+  * The join is null-safe (`<=>`), which Spark plans as a hash/sort-merge
+  * equi-join on the two-part key `(tweetid IS NULL, coalesce(tweetid, 0))`.
+  * Every suspect row contributes its own id AND a NULL id to the build side,
+  * so a NULL probe id matches exactly when some row is suspect, and the
+  * `IS NULL` half of the key keeps a NULL id from colliding with a real id 0.
+  * The `distinct` collapses the per-row NULL keys within each task before the
+  * shuffle, so that key is not skewed. The plan reads the source twice — the
+  * probe side and the suspect scan — and has no nested-loop or cross join.
+  *
+  * The suspect scan reads only `tweetid` and `tweet_time`. On a
+  * DROPMALFORMED CSV read, Spark 4 drops a row only when a column the query
+  * reads is malformed (with or without CSV column pruning), so a row the
+  * import itself drops (malformed in some other column) can still be
+  * suspect here and remove its id twins and, as above, the NULL ids.
+  * Spark 2.3, which the reference ran on, treated a row as malformed if any
+  * of its columns was.
   */
 object Cleanse {
   /** Reference validity regex (package.scala:84): `yyyy-MM-dd HH:mm`, anchored
@@ -25,16 +42,10 @@ object Cleanse {
   val TweetTimePattern = "^[0-9]{4}-[0-9]{2}-[0-9]{2} [0-9]{2}:[0-9]{2}$"
 
   def twitterCleanse(df: DataFrame): DataFrame = {
-    val bad = df
+    val suspectIds = df
       .filter(col("tweet_time").isNull || !col("tweet_time").rlike(TweetTimePattern))
-      .select(col("tweetid"))
-    // NULL ids never match the anti join, so they survive it; `NOT IN` drops
-    // them only when the list is non-empty. A broadcast 1-row count keeps that
-    // conditional fully distributed (no driver-side isEmpty round-trip).
-    val badCnt = broadcast(bad.agg(count(lit(1)).as("_graft_bad_cnt")))
-    df.join(bad, Seq("tweetid"), "left_anti")
-      .crossJoin(badCnt)
-      .filter(col("tweetid").isNotNull || col("_graft_bad_cnt") === 0)
-      .drop("_graft_bad_cnt")
+      .select(explode(array(col("tweetid"), lit(null))).as("_graft_suspect_id"))
+      .distinct()
+    df.join(suspectIds, col("tweetid") <=> col("_graft_suspect_id"), "left_anti")
   }
 }

@@ -1,5 +1,6 @@
 package graft.importer
 
+import graft.sources.Writers
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -31,11 +32,15 @@ case class ImportConfig(
   *     reference logged "Inferring schema" but read everything as String
   *     (package.scala:122);
   *   - partitioned writes use `repartition(partitionCols)` +
-  *     `sortWithinPartitions(sortCols)` so files are internally sorted — the
-  *     reference's global sort-then-repartition destroyed the order it had
-  *     just paid a range-shuffle for (package.scala:147→155);
-  *   - the cleanse is a single distributed anti-join, not a driver collect
-  *     (see [[Cleanse]]);
+  *     `sortWithinPartitions(partitionCols ++ sortCols)`
+  *     ([[graft.sources.Writers.partitionSorted]]) so every file is sorted by
+  *     `sortCols` — the reference's global sort-then-repartition destroyed
+  *     the order it had just paid a range-shuffle for
+  *     (package.scala:147→155). The partition columns lead the sort key
+  *     because the partitioned writer sorts by them itself otherwise, which
+  *     discards a `sortCols`-only order;
+  *   - the cleanse is one distributed left-anti join that reads the source
+  *     twice, not a driver collect (see [[Cleanse]]);
   *   - `removeArraySrc` is honored (the reference accepted and ignored it).
   */
 object Importer {
@@ -115,10 +120,7 @@ object Importer {
 
     val out =
       if (conf.partitionCols.nonEmpty) {
-        val partitioned = df.repartition(conf.partitionCols.map(col): _*)
-        val o =
-          if (conf.sortCols.nonEmpty) partitioned.sortWithinPartitions(conf.sortCols.map(col): _*)
-          else partitioned
+        val o = Writers.partitionSorted(df, conf.partitionCols, conf.sortCols)
         o.write.partitionBy(conf.partitionCols: _*).parquet(conf.destFile)
         o
       } else {

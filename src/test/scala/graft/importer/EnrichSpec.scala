@@ -118,6 +118,38 @@ class EnrichSpec extends SparkSpec {
     assert(out.count(_.isNullAt(0)) === 1)
   }
 
+  test("cleanse with only a NULL-id suspect row drops every NULL id and keeps every real id") {
+    val df = Seq(
+      (None: Option[Long], "garbage"),          // the only suspect row
+      (None: Option[Long], "2015-01-01 10:00"), // null id -> removed (NOT IN 3VL)
+      (Some(1L), "2015-01-01 11:00"),
+      (Some(2L), "2015-01-01 12:00"))
+      .toDF("tweetid", "tweet_time")
+    val out = Cleanse.twitterCleanse(df).select("tweetid").collect()
+    assert(out.count(_.isNullAt(0)) === 0)
+    assert(out.map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))
+  }
+
+  test("cleanse keeps a real tweetid 0 while dropping NULL ids (no key collision)") {
+    val df = Seq(
+      (Some(0L), "2015-01-01 10:00"),           // real id 0 -> kept
+      (Some(5L), "garbage"),                    // suspect
+      (None: Option[Long], "2015-01-01 12:00")) // null id -> removed
+      .toDF("tweetid", "tweet_time")
+    val out = Cleanse.twitterCleanse(df).select("tweetid").collect()
+    assert(out.toSeq === Seq(Row(0L)))
+  }
+
+  test("cleanse with a suspect id 0 removes the id-0 rows") {
+    val df = Seq(
+      (Some(0L), "garbage"),          // suspect id 0
+      (Some(0L), "2015-01-01 10:00"), // shares id 0 -> removed
+      (Some(1L), "2015-01-01 11:00"))
+      .toDF("tweetid", "tweet_time")
+    val out = Cleanse.twitterCleanse(df).select("tweetid").as[Long].collect().toSeq
+    assert(out === Seq(1L))
+  }
+
   test("cli accepts the reference's misspelled --delimeter alias") {
     val (conf, _, _) = ImporterCli.parseArgs(Array(
       "--srcFile", "in.csv", "--destFile", "out.parquet", "--delimeter", "\t"))

@@ -2,6 +2,10 @@ package graft.importer
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.scalatest.BeforeAndAfterAll
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
@@ -12,6 +16,9 @@ import scala.jdk.CollectionConverters._
   * with cleanse + date enrich + partitioned write.
   */
 class ImporterSpec extends SparkSpec with BeforeAndAfterAll {
+
+  /** Plan traversal that descends into adaptive query stages. */
+  private object PlanNodes extends AdaptiveSparkPlanHelper
 
   private var outDir: Path = _
   private var result: DataFrame = _
@@ -66,6 +73,45 @@ class ImporterSpec extends SparkSpec with BeforeAndAfterAll {
     assert(df.schema("tweetid").dataType.typeName === "long")
     assert(df.schema("is_retweet").dataType.typeName === "boolean")
     assert(df.schema("tweet_time").dataType.typeName === "string")
+  }
+
+  test("cleansed read plan: two CSV scans, no nested-loop join") {
+    val fixture = ImportConfig(
+      srcFile = "src/test/data/test-tweets.csv", destFile = "unused",
+      schemaFile = Some("src/test/data/tweets.schema"))
+    val cleansed = Cleanse.twitterCleanse(Importer.readCsv(fixture)(spark))
+    assert(cleansed.collect().length === 10)
+    val plan = cleansed.queryExecution.executedPlan
+    val csvScans = PlanNodes.collect(plan) {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[CSVFileFormat] => s
+    }
+    assert(csvScans.size === 2, s"expected probe + suspect scans only:\n$plan")
+    assert(PlanNodes.collect(plan) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
+      s"cleanse must be an equi-join:\n$plan")
+  }
+
+  test("partitioned import with sortCols writes every file in sortCols order") {
+    val dir = Files.createTempDirectory("graft-sorted-parts")
+    val csv = dir.resolve("in.csv")
+    val ids = new scala.util.Random(7).shuffle((1 to 600).toList)
+    Files.writeString(csv, ids.map(i => s"$i,2015-0${i % 3 + 1}-01 10:00")
+      .mkString("tweetid,tweet_time\n", "\n", "\n"))
+    val schema = dir.resolve("in.schema")
+    Files.writeString(schema, "tweetid=Long\ntweet_time=String\n")
+    val dest = dir.resolve("out")
+    Importer.readCsvWriteParquet(ImportConfig(
+      srcFile = csv.toString, destFile = dest.toString,
+      schemaFile = Some(schema.toString), dateEnrich = Some("tweet_time"),
+      sortCols = Seq("tweetid"), partitionCols = Seq("year", "month")))(spark)
+    val files = Files.walk(dest).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    assert(files.size === 3)
+    files.foreach { f =>
+      val got = spark.read.parquet(f.toString).select("tweetid").collect().map(_.getLong(0)).toSeq
+      assert(got.size === 200)
+      val inversions = got.zip(got.tail).count { case (a, b) => a > b }
+      assert(inversions === 0, s"$f is not in tweetid order")
+    }
   }
 
   test("gzip-compressed CSV imports transparently (multi-GB dumps ship compressed)") {
