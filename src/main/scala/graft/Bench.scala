@@ -164,6 +164,16 @@ object Bench {
     Some((rows, sec, bytes))
   }
 
+  /** Whether a record is `partial`: the caller asks for it (the shutdown
+    * hook), some row is unpriced (a round-11 record claimed
+    * partial:false over 24 rows at -1), or the sweep ran past its budget
+    * (a record at elapsed 1501.5 s of a 1500 s budget claimed
+    * partial:false). `elapsedSec` is the value the record prints.
+    */
+  private[graft] def isPartial(requested: Boolean, unpriced: Boolean,
+                               elapsedSec: Double, budgetSec: Double): Boolean =
+    requested || unpriced || elapsedSec > budgetSec
+
   def main(args: Array[String]): Unit = tools.BenchLock.exclusiveWait("Bench") {
     val startNs = System.nanoTime()
     // HARD WALL-CLOCK BUDGET (seconds). The round-8 driver sweep was killed
@@ -498,9 +508,8 @@ object Bench {
     @volatile var emitted = false
     def emit(partialReq: Boolean): Unit = synchronized {
       val rs = names.map(n => n -> results(n))
-      // honest completeness: partial whenever ANY row is unpriced — the
-      // r11 driver record claimed partial:false over 24 rows at -1
-      val partial = partialReq || rs.exists(_._2.median < 0)
+      val elS = String.format(java.util.Locale.ROOT, "%.1f", Double.box(elapsedSec))
+      val partial = isPartial(partialReq, rs.exists(_._2.median < 0), elS.toDouble, budgetSec)
       val qs = jmap(rs.map { case (k, r) => k -> fmt(r.median) })
       val iqrs = jmap(rs.map { case (k, r) => k -> fmt(r.iqr) })
       val sents = jmap(rs.map { case (k, r) => k -> fmt(r.sentinel) })
@@ -518,7 +527,6 @@ object Bench {
         val rps = if (sec > 0) String.format(java.util.Locale.ROOT, "%.0f", Double.box(rows / sec)) else "-1"
         s""","importer":{"rows":$rows,"sec":$secS,"rows_per_sec":$rps,"csv_bytes":$bytes}"""
       }.getOrElse("")
-      val elS = String.format(java.util.Locale.ROOT, "%.1f", Double.box(elapsedSec))
       val standingSnap = standingSnapshot() // lock-held copy: hook-safe vs concurrent insert
       val standingJson =
         if (standingSnap.isEmpty) ""

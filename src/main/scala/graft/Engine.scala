@@ -9,24 +9,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the local core count (the driver overrides via env on a real cluster).
   */
 object Engine {
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The settings every entry point shares, for `master` with
+    * `shufflePartitions` shuffle partitions.
+    */
+  def conf(master: String, shufflePartitions: String): Map[String, String] = Map(
+    "spark.master" -> master,
+    "spark.sql.shuffle.partitions" -> shufflePartitions,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    // coalesce by parallelism, not only bytes: CPU-heavy, byte-small
+    // exchanges (tokenize/shingle/hash pipelines) otherwise collapse to
+    // one task — byte-based sizing can't see per-row compute cost
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  /** A session with [[conf]]'s settings; `overrides` win over them. */
   def session(appName: String = "graft",
-              master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
-              shufflePartitions: Option[String] = None): SparkSession = {
-    val sp = shufflePartitions.getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", sp)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // coalesce by parallelism, not only bytes: CPU-heavy, byte-small
-      // exchanges (tokenize/shingle/hash pipelines) otherwise collapse to
-      // one task — byte-based sizing can't see per-row compute cost
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+              master: String = s"local[$cpus]",
+              shufflePartitions: Option[String] = None,
+              overrides: Map[String, String] = Map.empty): SparkSession = {
+    val builder = SparkSession.builder().appName(appName)
+    (conf(master, shufflePartitions.getOrElse(cpus)) ++ overrides)
+      .foreach { case (k, v) => builder.config(k, v) }
+    builder.getOrCreate()
   }
 
   /** Register every test table as a temp view (events additionally as

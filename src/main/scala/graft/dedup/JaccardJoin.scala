@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -84,17 +84,20 @@ object JaccardJoin {
     sh.groupBy(col("id"))
       .agg(sort_array(collect_list(col("sh"))).as("hs"), count(lit(1)).as("n"))
 
-  /** Prefix relation (id, sh, rk, n) under the GIVEN global rare-first
-    * order: rank each document's shingles by ascending `freq` df (hash
-    * tiebreak for determinism) and keep the first |S| - ceil(t·|S|) + 1.
-    * The `freq` relation must span every document that will be joined —
-    * completeness needs both sides of a pair ranked under the SAME order.
+  /** The one rank-and-cut of the prefix filter: the prefix relation
+    * (id, sh, rk, n) of `sh` under the order (`freq` df, shingle hash),
+    * keeping each document's first |S| - ceil(t·|S|) + 1 shingles.
+    * Shingles missing from `freq` take df 0 and rank rarest-first — how a
+    * delta ranks under a standing index's order. Completeness needs both
+    * sides of a joined pair ranked under the SAME order; any fixed total
+    * order serves. Lazy: a caller that feeds the prefix to more than one
+    * consumer materializes it.
     */
   private def prefixOf(sh: DataFrame, freq: DataFrame, sets: DataFrame,
                        tNum: Long, tDen: Long): DataFrame = {
-    val ranked = sh.join(freq, Seq("sh"))
+    val ranked = sh.join(freq, Seq("sh"), "left_outer")
       .withColumn("rk", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("df"), col("sh"))))
+        Window.partitionBy(col("id")).orderBy(coalesce(col("df"), lit(0L)), col("sh"))))
       .drop("df")
       .join(sets.select(col("id"), col("n")), Seq("id"))
     // prefix length |S| - ceil(t|S|) + 1; ceil on longs (Spark's `/` is
@@ -103,7 +106,6 @@ object JaccardJoin {
     ranked
       .filter(col("rk") <= col("n") - ceilTn + 1L)
       .select(col("id"), col("sh"), col("rk"), col("n"))
-      .transform(graft.Checkpoints.materialize(_))
   }
 
   /** PPJoin candidate join + exact verify between two prefix relations;
@@ -149,7 +151,7 @@ object JaccardJoin {
     val sets = setsOf(sh)
     // global rare-first order; ties broken by hash value for determinism
     val freq = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val prefix = prefixOf(sh, freq, sets, tNum, tDen)
+    val prefix = graft.Checkpoints.materialize(prefixOf(sh, freq, sets, tNum, tDen))
     joinVerified(prefix, prefix, sets, sets, tNum, tDen, symmetric = true)
   }
 
@@ -175,45 +177,24 @@ object JaccardJoin {
           "and double-count its shingles in the shared frequency order)")
     }
 
-  /** Shared two-corpus plumbing: shingle both sides once, rank BOTH under
-    * one union-frequency order (the prefix-filtering completeness proof
-    * needs the globally-smallest shared shingle of a qualifying pair to
-    * land in both prefixes under the SAME order, which per-side frequencies
-    * would break), and return each side's (prefix, sets).
-    */
-  private def twoSidedPrefixes(left: DataFrame, right: DataFrame,
-                               idCol: String, textCol: String,
-                               tNum: Long, tDen: Long, shingleWidth: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val shL = shingleRel(left, idCol, textCol, shingleWidth)
-    val shR = shingleRel(right, idCol, textCol, shingleWidth)
-    // (id, sh) rows are distinct per side and ids are disjoint across sides,
-    // so the plain union double-counts nothing
-    val freq = shL.union(shR).groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val setsL = setsOf(shL)
-    val setsR = setsOf(shR)
-    (prefixOf(shL, freq, setsL, tNum, tDen), setsL,
-      prefixOf(shR, freq, setsR, tNum, tDen), setsR)
-  }
-
   /** Asymmetric exact-Jaccard join: every (left id, right id) pair with
     * jaccard ≥ tNum/tDen — the INCREMENTAL dedup shape (today's crawl delta
     * vs the standing corpus): compare volume is delta-prefix × corpus-prefix
     * joins, never corpus × corpus, so a daily increment against a 100 TB
     * standing index costs ∝ |delta|'s rare-shingle joins, not the corpus
-    * quadratic. Left and right ids must be disjoint (they are distinct
-    * corpora) — guarded when [[CheckDisjointConf]] is set. Note this emits
-    * CROSS pairs only; an ingest that must also catch two near-dups arriving
-    * in the same delta wants [[incrementalPairs]].
+    * quadratic. It is [[pairsAgainst]] over a fresh, uncached
+    * [[buildIndex]] of `right`; a pipeline that probes one corpus more than
+    * once builds (or caches) the index itself. Left and right ids must be
+    * disjoint (they are distinct corpora) — guarded when
+    * [[CheckDisjointConf]] is set. Note this emits CROSS pairs only; an
+    * ingest that must also catch two near-dups arriving in the same delta
+    * wants [[incrementalPairs]].
     */
   def pairsBetween(left: DataFrame, right: DataFrame,
                    idCol: String, textCol: String,
-                   tNum: Long, tDen: Long, shingleWidth: Int = 3): DataFrame = {
-    assertDisjoint(left, idCol, right, idCol, "pairsBetween")
-    val (pL, setsL, pR, setsR) =
-      twoSidedPrefixes(left, right, idCol, textCol, tNum, tDen, shingleWidth)
-    joinVerified(pL, pR, setsL, setsR, tNum, tDen, symmetric = false)
-  }
+                   tNum: Long, tDen: Long, shingleWidth: Int = 3): DataFrame =
+    pairsAgainst(buildIndex(right, idCol, textCol, tNum, tDen, shingleWidth),
+      left, idCol, textCol)
 
   /** The COMPLETE incremental-dedup pair set: [[pairsBetween]]'s delta ×
     * corpus cross pairs UNIONED with the delta's self-pairs (id1 < id2,
@@ -221,21 +202,24 @@ object JaccardJoin {
     * that both arrive in today's crawl are never compared (neither is in
     * the standing corpus yet). Cost stays incremental: the self-join is
     * delta-prefix × delta-prefix (|delta| ≪ |corpus|), and both joins
-    * reuse ONE shingling/ranking of each side under the shared
-    * union-frequency order — any fixed total order satisfies the prefix
-    * completeness theorem, for the self-join exactly as for the cross join.
-    * Output: cross pairs carry (id1 ∈ delta, id2 ∈ corpus); self-pairs
-    * carry (id1 < id2, both ∈ delta) — each unordered pair exactly once,
-    * like [[pairs]].
+    * share ONE ranking of the delta under the corpus index's order — any
+    * fixed total order satisfies the prefix completeness theorem, for the
+    * self-join exactly as for the cross join. Output: cross pairs carry
+    * (id1 ∈ delta, id2 ∈ corpus); self-pairs carry (id1 < id2, both ∈
+    * delta) — each unordered pair exactly once, like [[pairs]].
     */
   def incrementalPairs(delta: DataFrame, corpus: DataFrame,
                        idCol: String, textCol: String,
                        tNum: Long, tDen: Long, shingleWidth: Int = 3): DataFrame = {
-    assertDisjoint(delta, idCol, corpus, idCol, "incrementalPairs")
-    val (pL, setsL, pR, setsR) =
-      twoSidedPrefixes(delta, corpus, idCol, textCol, tNum, tDen, shingleWidth)
-    joinVerified(pL, pR, setsL, setsR, tNum, tDen, symmetric = false)
-      .unionByName(joinVerified(pL, pL, setsL, setsL, tNum, tDen, symmetric = true))
+    val index = buildIndex(corpus, idCol, textCol, tNum, tDen, shingleWidth)
+    assertDisjoint(delta, idCol, index.sets, "id", "incrementalPairs")
+    val shD = shingleRel(delta, idCol, textCol, shingleWidth)
+    val setsD = setsOf(shD)
+    // two consumers: the cross probe and the self-join
+    val prefixD = graft.Checkpoints.materialize(
+      prefixOf(shD, index.freq, setsD, tNum, tDen))
+    joinVerified(prefixD, index.prefix, setsD, index.sets, tNum, tDen, symmetric = false)
+      .unionByName(joinVerified(prefixD, prefixD, setsD, setsD, tNum, tDen, symmetric = true))
   }
 
   /** A prebuilt standing-corpus index for repeated [[pairsAgainst]] probes:
@@ -259,8 +243,8 @@ object JaccardJoin {
     val freq = graft.Checkpoints.materialize(
       sh.groupBy(col("sh")).agg(count(lit(1)).as("df")))
     val sets = setsOf(sh)
-    Index(freq, sets, prefixOf(sh, freq, sets, tNum, tDen), sh,
-      tNum, tDen, shingleWidth)
+    Index(freq, sets, graft.Checkpoints.materialize(prefixOf(sh, freq, sets, tNum, tDen)),
+      sh, tNum, tDen, shingleWidth)
   }
 
   /** Fold accepted delta documents INTO a standing index — the update half
@@ -300,7 +284,8 @@ object JaccardJoin {
     val setsNew = graft.Checkpoints.materialize(
       index.sets.unionByName(setsOf(shD)))
     Index(freqNew, setsNew,
-      prefixOf(shNew, freqNew, setsNew, index.tNum, index.tDen), shNew,
+      graft.Checkpoints.materialize(
+        prefixOf(shNew, freqNew, setsNew, index.tNum, index.tDen)), shNew,
       index.tNum, index.tDen, index.shingleWidth)
   }
 
@@ -330,16 +315,8 @@ object JaccardJoin {
     val shD = precomputedSh.getOrElse(
       shingleRel(delta, idCol, textCol, index.shingleWidth))
     val setsD = graft.Checkpoints.materialize(setsOf(shD))
-    val ranked = shD.join(index.freq, Seq("sh"), "left_outer")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("df"), col("sh"))))
-      .drop("df")
-      .join(setsD.select(col("id"), col("n")), Seq("id"))
-    val ceilTn = expr(s"(n * ${index.tNum} + ${index.tDen - 1L}) div ${index.tDen}")
-    val prefixD = graft.Checkpoints.materialize(ranked
-      .filter(col("rk") <= col("n") - ceilTn + 1L)
-      .select(col("id"), col("sh"), col("rk"), col("n")))
+    val prefixD = graft.Checkpoints.materialize(
+      prefixOf(shD, index.freq, setsD, index.tNum, index.tDen))
     // sets/prefix/sh accumulate LAZILY (unioned plans over materialized
     // legs): each fold adds ONE leg, so logical-plan depth — and with it
     // per-batch analyzer time and driver stack — grows with the fold count
@@ -434,11 +411,12 @@ object JaccardJoin {
     * rank rarest-first. Any fixed total order satisfies the prefix-filter
     * completeness theorem (the globally-smallest shared shingle of a
     * qualifying pair lands in both prefixes), and the exact verify step
-    * makes the emitted pair set identical to [[pairsBetween]]'s regardless
-    * of which order generated the candidates — pinned in JaccardJoinSpec.
-    * This is also why per-micro-batch probes compose: the pair set is a
-    * per-pair predicate, so probing batch-by-batch unions to exactly the
-    * whole-delta result at any batch slicing.
+    * makes the emitted pair set identical to the delta × corpus pairs of
+    * the symmetric [[pairs]] over both corpora, whichever order generated
+    * the candidates — pinned in JaccardJoinSpec. This is also why
+    * per-micro-batch probes compose: the pair set is a per-pair predicate,
+    * so probing batch-by-batch unions to exactly the whole-delta result at
+    * any batch slicing.
     */
   def pairsAgainst(index: Index, delta: DataFrame,
                    idCol: String, textCol: String,
@@ -447,19 +425,19 @@ object JaccardJoin {
     val shL = precomputedSh.getOrElse(
       shingleRel(delta, idCol, textCol, index.shingleWidth))
     val setsL = setsOf(shL)
-    // rank under the index's order; corpus-unseen shingles get df 0
-    val ranked = shL.join(index.freq, Seq("sh"), "left_outer")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("df"), col("sh"))))
-      .drop("df")
-      .join(setsL.select(col("id"), col("n")), Seq("id"))
-    val ceilTn = expr(s"(n * ${index.tNum} + ${index.tDen - 1L}) div ${index.tDen}")
-    val pL = ranked
-      .filter(col("rk") <= col("n") - ceilTn + 1L)
-      .select(col("id"), col("sh"), col("rk"), col("n"))
-    joinVerified(pL, index.prefix, setsL, index.sets,
-      index.tNum, index.tDen, symmetric = false)
+    joinVerified(prefixOf(shL, index.freq, setsL, index.tNum, index.tDen), index.prefix,
+      setsL, index.sets, index.tNum, index.tDen, symmetric = false)
+  }
+
+  /** An empty relation typed exactly like [[pairsAgainst]]'s output. The
+    * schema comes from analysing the verify kernel over the index's
+    * relations; no job runs and nothing is read.
+    */
+  def emptyPairs(index: Index): DataFrame = {
+    val spark = index.prefix.sparkSession
+    val schema = joinVerified(index.prefix, index.prefix, index.sets, index.sets,
+      index.tNum, index.tDen, symmetric = false).schema
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
 
   /** Cheap order-independent corpus fingerprint for persisted-index

@@ -85,6 +85,14 @@ object ImporterCli {
     (conf, sparkOpts, opts.getOrElse("threads", "*"))
   }
 
+  /** The CLI session's settings: [[Engine.conf]] on `--threads` local
+    * threads (`*`: all `cores`) with one shuffle partition per thread, and
+    * the `--sparkOpts` entries over them.
+    */
+  private[importer] def sessionConf(threads: String, sparkOpts: Map[String, String],
+                                    cores: Int): Map[String, String] =
+    Engine.conf(s"local[$threads]", if (threads == "*") cores.toString else threads) ++ sparkOpts
+
   /** Usage banner printed on parse failure (reference Config.scala:6-10). */
   private val usage =
     """
@@ -119,14 +127,8 @@ object ImporterCli {
           System.err.println(s"error: ${e.getMessage}\n$usage")
           sys.exit(2)
       }
-    val builder = SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName("graft-importer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    sparkOpts.foreach { case (k, v) => builder.config(k, v) }
-    implicit val spark: SparkSession = builder.getOrCreate()
+    implicit val spark: SparkSession = Engine.session("graft-importer",
+      overrides = sessionConf(threads, sparkOpts, Runtime.getRuntime.availableProcessors))
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val out = Importer.readCsvWriteParquet(conf)

@@ -80,23 +80,11 @@ object Standing {
     "standing_pq_codebook" ->
       ((s: SparkSession, d: String) => force(graft.similarity.Pq.codebookCached(
         graft.Tables(s, d, "embeddings"), "vec_id", "embedding")._1)),
-    // Jaccard prefix indexes: q121's one-day corpus and q125's two-day one
+    // Jaccard prefix indexes: q116/q121's one-day corpus and q125's two-day one
     "standing_jaccard_index" ->
-      ((s: SparkSession, d: String) => {
-        val docs = graft.Tables(s, d, "documents")
-        graft.dedup.JaccardJoin.buildIndexCached(
-          docs.filter(col("source") =!= "src18"), "doc_id", "text",
-          tNum = 1L, tDen = 2L)
-        ()
-      }),
+      ((s: SparkSession, d: String) => { NorthStar.dayCorpusIndex(s, d); () }),
     "standing_jaccard_2day" ->
-      ((s: SparkSession, d: String) => {
-        val docs = graft.Tables(s, d, "documents")
-        graft.dedup.JaccardJoin.buildIndexCached(
-          docs.filter(col("source") =!= "src18" && col("source") =!= "src19"),
-          "doc_id", "text", tNum = 1L, tDen = 2L)
-        ()
-      }),
+      ((s: SparkSession, d: String) => { NorthStar.twoDayCorpusIndex(s, d); () }),
     // the corpus's complete exact-Jaccard (t = 1/2) near-dup pair set —
     // consumed by nine declared queries (q56/q107/q115/q147/q248/q285/
     // q293/q294/q301), each of which was re-running the full

@@ -72,8 +72,9 @@ class JaccardJoinSpec extends SparkSpec {
 
   test("pairsAgainst a prebuilt index equals pairsBetween (order-invariance)") {
     // the index ranks by corpus-only frequency (delta-unseen shingles df=0);
-    // pairsBetween ranks by union frequency — different candidate orders,
-    // but the exact verify must make the emitted pair sets identical
+    // pairsBetween probes a fresh build of the same index, so a prebuilt
+    // index must emit exactly its pair set (the order-invariance against the
+    // symmetric join's full-corpus order is pinned by the test above)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val delta = docs.filter($"source" === "src18")
     val corpus = docs.filter($"source" =!= "src18")

@@ -66,4 +66,19 @@ class ImporterCliSpec extends AnyFunSuite {
       "--srcFile", "a", "--destFile", "b"))
     assert(!conf2.multiLine)
   }
+
+  test("the CLI session takes Engine's settings, with --threads and --sparkOpts over them") {
+    val dflt = ImporterCli.sessionConf("*", Map.empty, cores = 6)
+    assert(dflt === graft.Engine.conf("local[*]", "6"))
+    assert(dflt("spark.sql.adaptive.coalescePartitions.parallelismFirst") === "true")
+    val (_, sparkOpts, threads) = ImporterCli.parseArgs(Array(
+      "-s", "a", "-d", "b", "-t", "3", "-k", "spark.sql.shuffle.partitions=7,spark.foo=x"))
+    val set = ImporterCli.sessionConf(threads, sparkOpts, cores = 6)
+    assert(set("spark.master") === "local[3]")
+    assert(set("spark.sql.shuffle.partitions") === "7", "--sparkOpts wins over --threads")
+    assert(set("spark.foo") === "x")
+    assert(set.removedAll(Seq("spark.master", "spark.sql.shuffle.partitions", "spark.foo")) ===
+      graft.Engine.conf("m", "p").removedAll(Seq("spark.master", "spark.sql.shuffle.partitions")))
+    assert(ImporterCli.sessionConf("2", Map.empty, cores = 6)("spark.sql.shuffle.partitions") === "2")
+  }
 }

@@ -52,6 +52,26 @@ class NorthStarSpec extends SparkSpec {
     }
   }
 
+  test("q116 equals the decision record of the symmetric pair set's src18 × other-source pairs") {
+    val docs = graft.Tables(spark, sf0001, "documents")
+    val delta = docs.filter($"source" === "src18").select($"doc_id").as[Long].collect().toSet
+    val cross = graft.dedup.JaccardJoin.pairs(docs, "doc_id", "text", 1L, 2L)
+      .select($"id1", $"id2", $"jaccard").as[(Long, Long, Double)].collect()
+      .collect {
+        case (a, b, j) if delta(a) && !delta(b) => (a, b, j)
+        case (a, b, j) if delta(b) && !delta(a) => (b, a, j)
+      }
+    // per delta doc: match count, best match by highest jaccard, smallest id
+    val want = cross.groupBy(_._1).toSeq.map { case (id, ms) =>
+      val (_, best, j) = ms.minBy { case (_, b, j) => (-j, b) }
+      (id, ms.length.toLong, best, j)
+    }.sortBy(_._1)
+    val got = NorthStar.q116IncrementalDedup(spark, sf0001)
+      .as[(Long, Long, Long, Double)].collect().toSeq
+    assert(want.nonEmpty, "src18 has cross-source near-dups at sf0.001; empty would be vacuous")
+    assert(got === want)
+  }
+
   test("q298 negative sampling: LCG draws replay exactly and no negative is a true interaction") {
     val inter = graft.Tables(spark, sf0001, "orders")
       .join(graft.Tables(spark, sf0001, "lineitem"),

@@ -240,6 +240,21 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("q121 drain with no match returns an empty record with q116's columns and types") {
+    val corpus = Seq((0L, "a b c d e f g h"), (1L, "p q r s t u v w")).toDF("doc_id", "text")
+    val index = graft.dedup.JaccardJoin.buildIndex(corpus, "doc_id", "text", 1L, 2L)
+    val want = graft.operators.NorthStar.q116IncrementalDedup(spark, sf0001).schema
+      .map(f => (f.name, f.dataType))
+    val unmatched = Seq((100L, "x y z w v u"), (101L, "k l m n o")).toDF("doc_id", "text")
+    // batches arrive and none matches; no batch arrives, so only the seed
+    // batch is read back
+    Seq(unmatched, unmatched.limit(0)).foreach { delta =>
+      val got = Windows.probeDrain(index, delta)
+      assert(got.isEmpty)
+      assert(got.schema.map(f => (f.name, f.dataType)) === want)
+    }
+  }
+
   test("q152 streaming decontam equals q119's batch answer; sink idempotent under redelivery") {
     val got = Windows.q152StreamDecontam(spark, sf0001).collect().toSeq
     val want = graft.operators.NorthStar.q119BenchmarkDecontamination(spark, sf0001)
