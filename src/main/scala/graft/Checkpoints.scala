@@ -142,6 +142,22 @@ object Checkpoints {
     }
   }
 
+  /** Best-effort recursive delete of a scratch directory (a drain's temp
+    * dir, a throwaway streaming checkpoint). A missing path is a no-op; an
+    * entry that cannot be removed is skipped. Only non-fatal errors are
+    * swallowed, so a cleanup in a `finally` never masks the real failure.
+    */
+  def deleteRecursively(dir: String): Unit = {
+    import scala.util.control.NonFatal
+    def quietly(f: => Unit): Unit = try f catch { case NonFatal(_) => () }
+    quietly {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => quietly(java.nio.file.Files.deleteIfExists(p)))
+      finally walk.close()
+    }
+  }
+
   /** [[materializeCached]] with an EXPLICIT key and a lazy build thunk —
     * for standing relations whose builder performs EAGER work during plan
     * CONSTRUCTION (e.g. [[graft.dedup.JaccardJoin.pairs]] localCheckpoints

@@ -504,14 +504,6 @@ object Extras {
       .limit(25)
   }
 
-  private def deleteRecursively(dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-  }
-
   /** Q224: federated multi-format query — one join across a CSV export, a
     * JSON export, and an ORC export of three dimension tables, proving
     * the source surface end-to-end (write → schema-applied read → joined
@@ -542,7 +534,7 @@ object Extras {
           .agg(big(count(lit(1))).as("n_suppliers"),
             round(moneySum(col("s_acctbal")), 4).as("total_bal"))
           .orderBy(col("r_name")))
-    } finally deleteRecursively(tmp)
+    } finally graft.Checkpoints.deleteRecursively(tmp)
   }
 
   /** Q225: schema-evolution read — the v1/v2 parquet situation every
@@ -572,7 +564,7 @@ object Extras {
           .agg(big(count(lit(1))).as("n"),
             round(moneySum(col("o_totalprice")), 4).as("total"))
           .orderBy(col("status")))
-    } finally deleteRecursively(tmp)
+    } finally graft.Checkpoints.deleteRecursively(tmp)
   }
 
   /** Q229: order-independent table content fingerprints — the replication
@@ -719,7 +711,7 @@ object Extras {
             big(sum(col("ln.qty"))).as("total_qty"),
             round(sum(col("ln.price")).cast("double"), 4).as("revenue"))
           .orderBy(col("o_orderstatus")))
-    } finally deleteRecursively(tmp)
+    } finally graft.Checkpoints.deleteRecursively(tmp)
   }
 
   /** Q287: order/line reconciliation audit — the warehouse consistency

@@ -246,13 +246,7 @@ object Layout {
       Seq((filesBefore, filesAfter, rowsBefore, rowsAfter, totalChars, diff, nOut))
         .toDF("files_before", "files_after", "rows_before", "rows_after",
           "total_chars", "content_diff", "target_files")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(tmp))
-    }
+    } finally graft.Checkpoints.deleteRecursively(tmp)
   }
 
   /** Q270: storage layout advisor — the partition-count planning pass a

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.Tables
 import graft.Dsl._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -125,16 +125,21 @@ object Windows {
   /** Run a streaming aggregation to completion against the (static) test
     * directory and return the final result — memory sink + a single
     * availability pass; the production path would `writeStream` to a real
-    * sink with the same plan.
+    * sink with the same plan. `punctuate`, when given, runs after that pass
+    * and is followed by a second one: the end-of-stream control message of
+    * q66/q83, which must reach the query after the file data has drained.
     */
-  def runToBatch(agg: DataFrame, name: String, mode: OutputMode = OutputMode.Complete): DataFrame = {
+  def runToBatch(agg: DataFrame, name: String, mode: OutputMode = OutputMode.Complete,
+                 punctuate: Option[() => Unit] = None): DataFrame = {
     val spark = agg.sparkSession
     val unique = s"${name}_${runCounter.incrementAndGet()}"
     // shuffle.partitions fixes the STATE STORE partition count for the
     // query's lifetime; a state store instance must init/commit per partition
     // per micro-batch, so a local all-at-once drain wants few fat partitions
     // (a production deployment sizing for incremental 100 TB ingest would
-    // instead set this high BEFORE first start — it is frozen thereafter)
+    // instead set this high BEFORE first start — it is frozen thereafter).
+    // 8 is pinned: 8, 4 and 2 measured a wash (BENCH.md, stream-drain state
+    // partitions), because the drain's cost is the query lifecycle
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     // checkpoint to shared memory when available: the ephemeral local drain
     // writes offset/commit/state files per micro-batch, and that fsync cost
@@ -144,25 +149,62 @@ object Windows {
     val ckptBase =
       if (shm.isDirectory && shm.canWrite) s"/dev/shm/graft-ckpt/$unique"
       else s"${System.getProperty("java.io.tmpdir")}/graft-ckpt/$unique"
-    val stateParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
     val q =
       try {
-        spark.conf.set("spark.sql.shuffle.partitions", stateParts)
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         agg.writeStream.outputMode(mode).format("memory")
           .option("checkpointLocation", ckptBase).queryName(unique).start()
       } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try q.processAllAvailable() finally {
+    try {
+      q.processAllAvailable()
+      punctuate.foreach { p => p(); q.processAllAvailable() }
+    } finally {
       q.stop()
-      // best-effort cleanup of the throwaway checkpoint
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(ckptBase))
+      graft.Checkpoints.deleteRecursively(ckptBase)
     }
     spark.table(unique)
   }
   private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Drain one file-fed streaming twin; every `foreachBatch` twin below
+    * runs on this skeleton, and this is its contract:
+    *
+    *   - `feed` is written once per session as a parquet directory
+    *     ([[graft.Checkpoints.feedDirCached]]) and streamed back file by
+    *     file (`maxFilesPerTrigger=1`), so the feed's partitioning is the
+    *     trigger slicing and no feed row passes through the driver.
+    *   - `writer(tmp)` is the per-batch sink. Empty batches, which the file
+    *     source's lifecycle can deliver, never reach it ([[nonEmptyBatches]]).
+    *     A sink writes each batch to its own `<dir>/batch=<batchId>` with
+    *     overwrite: Structured Streaming replays a batch with the same
+    *     batchId and the same input slice, so an at-least-once redelivery
+    *     rewrites identical content instead of appending duplicates.
+    *   - after the feed has drained, `finish(tmp)` merges what the batches
+    *     wrote. It must return a materialized result, because `tmp`, with
+    *     every directory the sink and `finish` wrote under it, is deleted
+    *     before `drain` returns. The delete also runs when the writer
+    *     throws; the exception propagates.
+    */
+  private[streaming] def drain(name: String, feed: DataFrame)(
+      writer: String => (Dataset[Row], Long) => Unit)(
+      finish: String => DataFrame): DataFrame = {
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft_${name}_").toString
+    try {
+      val write = nonEmptyBatches(writer(tmp))
+      val q = feed.sparkSession.readStream.schema(feed.schema)
+        .option("maxFilesPerTrigger", "1").parquet(graft.Checkpoints.feedDirCached(feed))
+        .writeStream.outputMode(OutputMode.Append)
+        .foreachBatch(write)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      finish(tmp)
+    } finally graft.Checkpoints.deleteRecursively(tmp)
+  }
+
+  /** The per-batch guard of [[drain]]: `write` sees only non-empty batches. */
+  private[streaming] def nonEmptyBatches(write: (Dataset[Row], Long) => Unit)
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) => if (!batch.isEmpty) write(batch, batchId)
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -218,27 +260,15 @@ object Windows {
     val punctDf = punct.toDF()
       .select(lit(-1L).as("user_id"), timestamp_seconds(col("value")).as("ts2"))
     val union = eventsStream(s, d).select(col("user_id"), col("ts2")).union(punctDf)
-    val sessions = statefulSessions(union).toDF()
-    val unique = s"graft_q66_${runCounter.incrementAndGet()}"
     // measured (DebugQ66 same-JVM A/B, sf0.1): case-class state 1.77 s,
     // all-tuple primitive state 1.80 s, and the codegen'd session_window
     // formulation 2.00 s in THIS two-phase punctuated drain — the cost is
     // the drain lifecycle (two micro-batch passes + memory-sink collect),
-    // not per-row typed encoding, and 8 vs 32 state partitions is a wash;
-    // keep the same 8-partition pin as the other local drains
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        sessions.writeStream.outputMode(OutputMode.Append)
-          .format("memory").queryName(unique).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    try {
-      q.processAllAvailable()               // drain the file data
-      punct.addData(maxEs + 2 * 3600 + 1800 + 60)
-      q.processAllAvailable()               // watermark passes every timeout
-    } finally q.stop()
-    s.table(unique)
+    // not per-row typed encoding, and 8 vs 32 state partitions is a wash.
+    // The heartbeat lands after the file data drains; the second pass then
+    // moves the watermark past every timeout
+    runToBatch(statefulSessions(union).toDF(), "graft_q66", OutputMode.Append,
+      punctuate = Some(() => punct.addData(maxEs + 2 * 3600 + 1800 + 60)))
       .filter(col("user_id") >= 0)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_sessions"),
@@ -321,21 +351,10 @@ object Windows {
       .select(col("user_id"),
         col("view_ts").cast("long").as("view_es"),
         col("click_ts").cast("long").as("click_es"))
-    val unique = s"graft_q83_${runCounter.incrementAndGet()}"
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-        joined.writeStream.outputMode(OutputMode.Append)
-          .format("memory").queryName(unique).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    try {
-      q.processAllAvailable()               // drain the file data
-      punct.addData(maxEs + 2 * 3600 + 1800 + 60)
-      q.processAllAvailable()               // watermark passes every view's window
-    } finally q.stop()
-    s.table(unique)
+    // the heartbeat lands after the file data drains; the second pass then
+    // moves the watermark past every view's window
+    runToBatch(joined, "graft_q83", OutputMode.Append,
+      punctuate = Some(() => punct.addData(maxEs + 2 * 3600 + 1800 + 60)))
       .filter(col("user_id") >= 0)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_rows"),
@@ -387,69 +406,39 @@ object Windows {
     val docs = graft.Tables(s, d, "documents")
     val base = docs.select(col("doc_id"), col("text"), col("lang"))
       .withColumn("provenance", lit("keep"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q98_").toString
-    try {
-    val dirs = Array(s"$tmp/state0", s"$tmp/state1")
-    base.write.mode("overwrite").parquet(dirs(0))
     val cur = new java.util.concurrent.atomic.AtomicInteger(0)
-    // executor-side feed: the changeset lands as 2 parquet files and
-    // streams back file-by-file — no changeset row ever touches the
-    // driver. Any file-partition of the changeset keeps batches
-    // key-disjoint (each cs_id occurs exactly once), so sequential
-    // application still equals the one-shot MERGE at any trigger slicing —
-    // at most one non-empty batch per file (the file-stream lifecycle may
-    // add empty/extra triggers; the !batch.isEmpty guard skips them), and
-    // any slicing is merge-equivalent.
+    // the changeset lands as 2 feed files ([[drain]]). Any file-partition
+    // of the changeset keeps batches key-disjoint (each cs_id occurs
+    // exactly once), so sequential application still equals the one-shot
+    // MERGE at any trigger slicing
     val cs = graft.operators.NorthStar.changeset(docs)
-    val feedDir = graft.Checkpoints.feedDirCached(cs.repartition(2, col("cs_id")))
-    val sdf = s.readStream.schema(cs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feedDir)
-    val q = sdf.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val c = cur.get()
-          mergeCdcBatch(s.read.parquet(dirs(c)), batch)
-            .write.mode("overwrite").parquet(dirs(1 - c))
-          cur.set(1 - c)
-        }
-        ()
+    drain("q98", cs.repartition(2, col("cs_id"))) { tmp =>
+      base.write.mode("overwrite").parquet(s"$tmp/state0")
+      (batch, _) => {
+        val c = cur.get()
+        mergeCdcBatch(s.read.parquet(s"$tmp/state$c"), batch)
+          .write.mode("overwrite").parquet(s"$tmp/state${1 - c}")
+        cur.set(1 - c)
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // materialize the final state so the temp dirs can be deleted before
-    // returning (the q121/q152 fix applied to the remaining leaker —
-    // round-7 VERDICT item 7); the returned DataFrame reads the
-    // checkpointed blocks, not dirs(cur)
-    graft.Checkpoints.materialize(
-      s.read.parquet(dirs(cur.get()))
-        .select(col("doc_id"), col("provenance"),
-          length(col("text")).cast("long").as("n_chars_new"))
-        .orderBy(col("doc_id")))
-    } finally deleteRecursively(tmp)
+    } { tmp =>
+      graft.Checkpoints.materialize(
+        s.read.parquet(s"$tmp/state${cur.get()}")
+          .select(col("doc_id"), col("provenance"),
+            length(col("text")).cast("long").as("n_chars_new"))
+          .orderBy(col("doc_id")))
+    }
   }
 
-  /** One micro-batch's probe results, written IDEMPOTENTLY: each batch
-    * owns the partition directory `outDir/batch=<batchId>` and OVERWRITES
-    * it, so an at-least-once redelivery (crash between sink write and
-    * offset commit, then replay) rewrites identical content instead of
-    * appending duplicate pair rows and inflating n_matches — the q98
-    * swap-on-commit idea applied per batch (redelivery test in
-    * WindowsSpec). Structured Streaming replays a batch with the SAME
-    * batchId and the same input slice, which is what makes
-    * directory-per-batch + overwrite exactly-once in effect.
+  /** One micro-batch's probe results, written idempotently under
+    * `outDir/batch=<batchId>` ([[drain]]'s sink contract): a redelivered
+    * batch rewrites its pair rows instead of appending duplicates that
+    * would inflate n_matches (redelivery test in StreamingSpec).
     */
   private[streaming] def writeProbeBatch(index: graft.dedup.JaccardJoin.Index,
                                          batch: org.apache.spark.sql.DataFrame,
                                          outDir: String, batchId: Long): Unit =
     graft.dedup.JaccardJoin.pairsAgainst(index, batch, "doc_id", "text")
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-
-  private def deleteRecursively(dir: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
-        .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
 
   /** Q121: STREAMING incremental dedup — [[graft.operators.NorthStar
     * .q116IncrementalDedup]] as the continuous-ingest pipeline it models:
@@ -482,40 +471,26 @@ object Windows {
                                     delta: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val s = delta.sparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q121_").toString
-    try {
-      val outDir = s"$tmp/matches"
-      val feedDir = graft.Checkpoints.feedDirCached(delta.repartition(2, col("doc_id")))
+    drain("q121", delta.repartition(2, col("doc_id"))) { tmp =>
+      (batch, batchId) => writeProbeBatch(index, batch, s"$tmp/matches", batchId)
+    } { tmp =>
       // seed the accumulator with the empty, typed pair relation under a
       // batch id no real trigger uses, so a drain with no matches still
       // reads back cleanly; it is written from the schema alone, so the
-      // index is not probed
+      // index is not probed. `batch` is the partition-discovery column
+      // from the per-batch dirs
       graft.dedup.JaccardJoin.emptyPairs(index)
-        .write.mode("overwrite").parquet(s"$outDir/batch=-1")
-      val sdf = s.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) writeProbeBatch(index, batch, outDir, batchId)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // `batch` is the partition-discovery column from the per-batch dirs.
-      // Materialize BEFORE the feed/matches dirs are deleted below — the
-      // caller gets a lineage-cut result, and a bench's median-of-5 no
-      // longer leaks several corpus-delta copies into /tmp per run
-      graft.Checkpoints.materialize(
-        graft.operators.NorthStar.bestMatches(s.read.parquet(outDir).drop("batch")))
-    } finally deleteRecursively(tmp)
+        .write.mode("overwrite").parquet(s"$tmp/matches/batch=-1")
+      graft.Checkpoints.materialize(graft.operators.NorthStar.bestMatches(
+        s.read.parquet(s"$tmp/matches").drop("batch")))
+    }
   }
 
   /** One micro-batch's decontamination records, written idempotently under
-    * `outDir/batch=<batchId>` with overwrite ([[writeProbeBatch]]'s
-    * exactly-once-in-effect discipline: a redelivered batch rewrites
-    * identical content). Per-doc counts are complete within the batch —
-    * a file-source doc arrives in exactly one micro-batch — so the union
-    * over batches is the whole-corpus answer at any trigger slicing.
+    * `outDir/batch=<batchId>` ([[drain]]'s sink contract). Per-doc counts
+    * are complete within the batch — a file-source doc arrives in exactly
+    * one micro-batch — so the union over batches is the whole-corpus
+    * answer at any trigger slicing.
     */
   private[streaming] def writeDecontamBatch(bench: org.apache.spark.sql.DataFrame,
                                             batch: org.apache.spark.sql.DataFrame,
@@ -575,23 +550,14 @@ object Windows {
     // standing benchmark set — memoized for the q119 reasons (shared kernel)
     val bench = benchNgramSet(s, d)
     val train = docs.filter(col("source") =!= "src0").select(col("doc_id"), col("text"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q152_").toString
-    try {
-      val outDir = s"$tmp/contam"
-      val feedDir = graft.Checkpoints.feedDirCached(train.repartition(2, col("doc_id")))
-      writeDecontamBatch(bench, train.limit(0), outDir, batchId = -1L)
-      val sdf = s.readStream.schema(train.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) writeDecontamBatch(bench, batch.toDF(), outDir, batchId)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val res = s.read.parquet(outDir).drop("batch").orderBy(col("doc_id"))
-      graft.Checkpoints.materialize(res)
-    } finally deleteRecursively(tmp)
+    drain("q152", train.repartition(2, col("doc_id"))) { tmp =>
+      (batch, batchId) => writeDecontamBatch(bench, batch, s"$tmp/contam", batchId)
+    } { tmp =>
+      // the empty seed keeps a drain with no contaminated doc readable
+      writeDecontamBatch(bench, train.limit(0), s"$tmp/contam", batchId = -1L)
+      graft.Checkpoints.materialize(
+        s.read.parquet(s"$tmp/contam").drop("batch").orderBy(col("doc_id")))
+    }
   }
 
   /** One micro-batch of the streaming decontamination REWRITE: [[graft
@@ -660,23 +626,13 @@ object Windows {
     // standing benchmark set — the q152 kernel, shared via the memo cache
     val bench = benchNgramSet(s, d)
     val train = docs.filter(col("source") =!= "src0").select(col("doc_id"), col("text"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q158_").toString
-    try {
-      val outDir = s"$tmp/clean"
-      val feedDir = graft.Checkpoints.feedDirCached(train.repartition(2, col("doc_id")))
-      writeDecontamRewriteBatch(bench, train.limit(0), outDir, batchId = -1L)
-      val sdf = s.readStream.schema(train.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) writeDecontamRewriteBatch(bench, batch.toDF(), outDir, batchId)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val res = s.read.parquet(outDir).drop("batch").orderBy(col("doc_id"))
-      graft.Checkpoints.materialize(res)
-    } finally deleteRecursively(tmp)
+    drain("q158", train.repartition(2, col("doc_id"))) { tmp =>
+      (batch, batchId) => writeDecontamRewriteBatch(bench, batch, s"$tmp/clean", batchId)
+    } { tmp =>
+      writeDecontamRewriteBatch(bench, train.limit(0), s"$tmp/clean", batchId = -1L)
+      graft.Checkpoints.materialize(
+        s.read.parquet(s"$tmp/clean").drop("batch").orderBy(col("doc_id")))
+    }
   }
 
   /** One ingest micro-batch: log the batch's documents to the ACCEPTED
@@ -792,48 +748,52 @@ object Windows {
     val docs = graft.Tables(s, d, "documents")
     val delta = docs.filter(col("source") === "src7").select(col("doc_id"), col("text"))
     val corpus = docs.filter(col("source") =!= "src7")
-    val deltaIds = graft.Checkpoints.materialize(
-      delta.select(col("doc_id").cast("long").as("did")))
     // session-cached like q121: folds never MUTATE the standing index —
     // foldInFrozen returns fresh Index values whose relations union the
     // (untouched) cached frames — so repeated invocations pay the corpus
     // shingling/ranking once and each run measures the per-batch loop
     val standing = graft.dedup.JaccardJoin.buildIndexCached(corpus, "doc_id", "text",
       tNum = 1L, tDen = 2L)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q155_").toString
-    try {
-      val outDir = s"$tmp/pairs"
-      val feedDir = graft.Checkpoints.feedDirCached(delta.repartition(2, col("doc_id")))
-      writeIngestBatch(standing, delta.limit(0), deltaIds, outDir, batchId = -1L)
-      val sdf = s.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      // the fold state lazy-inits through the RECOVERY path on the first
-      // delivered batch: a fresh run recovers from an empty accepted log
-      // (a no-op returning the standing index), a restarted run re-folds
-      // every batch the previous incarnation accepted — the in-memory
-      // `var` is now a cache of durable state, not the state itself
-      var idxOpt: Option[graft.dedup.JaccardJoin.Index] = None
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          // foreachBatch is sequential by contract, so the fold ordering
-          // (probe batch N against folds of 0..N-1) is well-defined
-          if (!batch.isEmpty) {
-            if (idxOpt.isEmpty)
-              idxOpt = Some(recoverIngestIndex(standing, outDir, batchId))
-            idxOpt = Some(writeIngestBatch(idxOpt.get, batch.toDF(), deltaIds, outDir, batchId))
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    ingestDrain(standing, delta)
+  }
+
+  /** q155's drain: `delta` streams in file by file, every micro-batch is
+    * probed, self-joined and folded in ([[writeIngestBatch]]), and the
+    * drained pairs become q123's decision record.
+    */
+  private[streaming] def ingestDrain(standing: graft.dedup.JaccardJoin.Index,
+                                     delta: DataFrame): DataFrame = {
+    val s = delta.sparkSession
+    val deltaIds = graft.Checkpoints.materialize(
+      delta.select(col("doc_id").cast("long").as("did")))
+    // the fold state lazy-inits through the RECOVERY path on the first
+    // delivered batch: a fresh run recovers from an empty accepted log
+    // (a no-op returning the standing index), a restarted run re-folds
+    // every batch the previous incarnation accepted — the in-memory
+    // `var` is now a cache of durable state, not the state itself
+    var idxOpt: Option[graft.dedup.JaccardJoin.Index] = None
+    drain("q155", delta.repartition(2, col("doc_id"))) { tmp =>
+      // foreachBatch is sequential by contract, so the fold ordering
+      // (probe batch N against folds of 0..N-1) is well-defined
+      (batch, batchId) => {
+        if (idxOpt.isEmpty)
+          idxOpt = Some(recoverIngestIndex(standing, s"$tmp/pairs", batchId))
+        idxOpt = Some(writeIngestBatch(idxOpt.get, batch, deltaIds, s"$tmp/pairs", batchId))
+      }
+    } { tmp =>
+      // seed: the empty pair relation in the written columns, built from
+      // the schema alone (the q121 seed), so no kernel runs on an empty batch
+      graft.dedup.JaccardJoin.emptyPairs(standing)
+        .select(col("id1"), col("id2"), col("jaccard"))
+        .write.mode("overwrite").parquet(s"$tmp/pairs/batch=-1")
       // q123's decision record verbatim: intra-delta pairs count for BOTH
       // members; one broadcast semi-join symmetrizes, then best-match window
-      val p = s.read.parquet(outDir).drop("batch")
+      val p = s.read.parquet(s"$tmp/pairs").drop("batch")
       val reversed = p.join(broadcast(deltaIds), p("id2") === deltaIds("did"), "left_semi")
         .select(col("id2").as("id1"), col("id1").as("id2"), col("jaccard"))
       graft.Checkpoints.materialize(graft.operators.NorthStar.bestMatches(
         p.select(col("id1"), col("id2"), col("jaccard")).unionByName(reversed)))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q101: STREAM-STATIC join — the dimension-enrichment shape that was
@@ -927,44 +887,34 @@ object Windows {
   def q175StreamScd2: Q = (s, d) => {
     val ev = graft.Tables.events(s, d)
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts2"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q175_").toString
-    try {
-      val logDir = s"$tmp/log"; val histDir = s"$tmp/hist"
-      val feedDir = graft.Checkpoints.feedDirCached(ev.repartition(3, col("user_id")))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            batch.write.mode("overwrite").parquet(s"$logDir/batch=$batchId")
-            val log = s.read.parquet(logDir).drop("batch")
-              .withColumn("bucket", pmod(col("user_id"), lit(64L)))
-            val touched = batch.select(pmod(col("user_id"), lit(64L)).as("bucket")).distinct()
-            graft.operators.Events
-              .scd2History(log.join(touched, Seq("bucket"), "left_semi"))
-              .withColumn("bucket", pmod(col("user_id"), lit(64L)))
-              // ONE file per touched bucket dir: without this the window
-              // output arrives on 32 shuffle partitions, each holding rows
-              // of ~all 64 buckets, so partitionBy fans out to ~32 files
-              // per dir — up to 2 048 tiny file creates PER BATCH (the
-              // round-8 per-user-dir churn lesson one level down; measured
-              // 7.3 → 6.2 s on the full drain). The history rows are small;
-              // one extra bucket-keyed exchange buys a 30× file-create cut.
-              .repartition(64, col("bucket"))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("bucket").parquet(histDir)
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val res = s.read.parquet(histDir)
-        .select(col("user_id"), col("version"),
-          col("event_type"), col("valid_from"), col("valid_to"))
-        .orderBy(col("user_id"), col("version"))
-      graft.Checkpoints.materialize(res)
-    } finally deleteRecursively(tmp)
+    drain("q175", ev.repartition(3, col("user_id"))) { tmp =>
+      (batch, batchId) => {
+        batch.write.mode("overwrite").parquet(s"$tmp/log/batch=$batchId")
+        val log = s.read.parquet(s"$tmp/log").drop("batch")
+          .withColumn("bucket", pmod(col("user_id"), lit(64L)))
+        val touched = batch.select(pmod(col("user_id"), lit(64L)).as("bucket")).distinct()
+        graft.operators.Events
+          .scd2History(log.join(touched, Seq("bucket"), "left_semi"))
+          .withColumn("bucket", pmod(col("user_id"), lit(64L)))
+          // ONE file per touched bucket dir: without this the window
+          // output arrives on 32 shuffle partitions, each holding rows
+          // of ~all 64 buckets, so partitionBy fans out to ~32 files
+          // per dir — up to 2 048 tiny file creates PER BATCH (the
+          // round-8 per-user-dir churn lesson one level down; measured
+          // 7.3 → 6.2 s on the full drain). The history rows are small;
+          // one extra bucket-keyed exchange buys a 30× file-create cut.
+          .repartition(64, col("bucket"))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("bucket").parquet(s"$tmp/hist")
+      }
+    } { tmp =>
+      graft.Checkpoints.materialize(
+        s.read.parquet(s"$tmp/hist")
+          .select(col("user_id"), col("version"),
+            col("event_type"), col("valid_from"), col("valid_to"))
+          .orderBy(col("user_id"), col("version")))
+    }
   }
 
   /** Q192: streaming incremental AUC — the mergeable-metric pattern: each
@@ -983,27 +933,17 @@ object Windows {
     val rows = Tables.events(s, d).select(
       dec(col("value")).as("v"),
       (col("event_type") === "purchase").cast("int").as("y"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q192_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(rows.repartition(3))
-      val sdf = s.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty)
-            graft.operators.Evaluation.scoreSummary(batch.toDF())
-              .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val merged = s.read.parquet(sumDir)
+    drain("q192", rows.repartition(3)) { tmp =>
+      (batch, batchId) =>
+        graft.operators.Evaluation.scoreSummary(batch)
+          .write.mode("overwrite").parquet(s"$tmp/summaries/batch=$batchId")
+    } { tmp =>
+      val merged = s.read.parquet(s"$tmp/summaries")
         .groupBy(col("v"))
         .agg(sum(col("cp")).cast("long").as("cp"), sum(col("cn")).cast("long").as("cn"))
       graft.Checkpoints.materialize(
         graft.operators.Evaluation.aucFromSummary(merged))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q201: streaming CUSUM change-point — q192's mergeable-summary
@@ -1019,28 +959,18 @@ object Windows {
     val rows = Tables.events(s, d).select(
       col("event_type"),
       expr("CAST(ts2 AS LONG) div 3600").as("h"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q201_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(rows.repartition(3))
-      val sdf = s.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty)
-            batch.groupBy(col("event_type"), col("h"))
-              .agg(count(lit(1)).as("n"))
-              .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val merged = s.read.parquet(sumDir)
+    drain("q201", rows.repartition(3)) { tmp =>
+      (batch, batchId) =>
+        batch.groupBy(col("event_type"), col("h"))
+          .agg(count(lit(1)).as("n"))
+          .write.mode("overwrite").parquet(s"$tmp/summaries/batch=$batchId")
+    } { tmp =>
+      val merged = s.read.parquet(s"$tmp/summaries")
         .groupBy(col("event_type"), col("h"))
         .agg(sum(col("n")).cast("long").as("n"))
       graft.Checkpoints.materialize(
         graft.operators.Events.changepointFromHourly(merged))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q219: streaming top-k leaderboard — the continuously-updated "top
@@ -1056,29 +986,19 @@ object Windows {
   def q219StreamTopk: Q = (s, d) => {
     val rows = Tables(s, d, "lineitem").select(
       col("l_partkey"), col("l_quantity").cast("long").as("q"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q219_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(rows.repartition(3))
-      val sdf = s.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty)
-            batch.groupBy(col("l_partkey"))
-              .agg(sum(col("q")).as("qty"))
-              .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    drain("q219", rows.repartition(3)) { tmp =>
+      (batch, batchId) =>
+        batch.groupBy(col("l_partkey"))
+          .agg(sum(col("q")).as("qty"))
+          .write.mode("overwrite").parquet(s"$tmp/summaries/batch=$batchId")
+    } { tmp =>
       graft.Checkpoints.materialize(
-        s.read.parquet(sumDir)
+        s.read.parquet(s"$tmp/summaries")
           .groupBy(col("l_partkey"))
           .agg(sum(col("qty")).cast("long").as("total_qty"))
           .orderBy(col("total_qty").desc, col("l_partkey"))
           .limit(25))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q264: streaming k-anonymity audit — q254's privacy gate maintained as
@@ -1101,37 +1021,27 @@ object Windows {
     val cust = Tables(s, d, "customer")
       .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"),
         col("c_acctbal"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q264_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(cust.repartition(3))
-      val sdf = s.readStream.schema(cust.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            val base = batch.toDF()
-              .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
-              .select(col("c_nationkey").cast("long").as("nk"),
-                col("n_regionkey").cast("long").as("rk"), col("c_mktsegment"),
-                floor(col("c_acctbal").cast("double") / lit(1000.0)).as("b1"),
-                floor(col("c_acctbal").cast("double") / lit(5000.0)).as("b5"))
-            val l0 = base.groupBy(col("nk"), col("c_mktsegment"), col("b1"))
-              .agg(count(lit(1)).as("n"))
-              .select(lit(0L).as("lvl"), col("nk").as("kA"),
-                col("c_mktsegment").as("seg"), col("b1").as("band"), col("n"))
-            val l1 = base.groupBy(col("rk"), col("c_mktsegment"), col("b5"))
-              .agg(count(lit(1)).as("n"))
-              .select(lit(1L).as("lvl"), col("rk").as("kA"),
-                col("c_mktsegment").as("seg"), col("b5").as("band"), col("n"))
-            l0.union(l1).write.mode("overwrite")
-              .parquet(s"$sumDir/batch=$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val sizes = s.read.parquet(sumDir)
+    drain("q264", cust.repartition(3)) { tmp =>
+      (batch, batchId) => {
+        val base = batch
+          .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
+          .select(col("c_nationkey").cast("long").as("nk"),
+            col("n_regionkey").cast("long").as("rk"), col("c_mktsegment"),
+            floor(col("c_acctbal").cast("double") / lit(1000.0)).as("b1"),
+            floor(col("c_acctbal").cast("double") / lit(5000.0)).as("b5"))
+        val l0 = base.groupBy(col("nk"), col("c_mktsegment"), col("b1"))
+          .agg(count(lit(1)).as("n"))
+          .select(lit(0L).as("lvl"), col("nk").as("kA"),
+            col("c_mktsegment").as("seg"), col("b1").as("band"), col("n"))
+        val l1 = base.groupBy(col("rk"), col("c_mktsegment"), col("b5"))
+          .agg(count(lit(1)).as("n"))
+          .select(lit(1L).as("lvl"), col("rk").as("kA"),
+            col("c_mktsegment").as("seg"), col("b5").as("band"), col("n"))
+        l0.union(l1).write.mode("overwrite")
+          .parquet(s"$tmp/summaries/batch=$batchId")
+      }
+    } { tmp =>
+      val sizes = s.read.parquet(s"$tmp/summaries")
         .groupBy(col("lvl"), col("kA"), col("seg"), col("band"))
         .agg(sum(col("n")).as("sz"))
       graft.Checkpoints.materialize(
@@ -1148,7 +1058,7 @@ object Windows {
                 .cast("double") / sum(col("sz")).cast("double"), 6)
               .as("risk_pct"))
           .orderBy(col("lvl"), col("k")))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q265: streaming Bollinger-band breakouts — q256's per-part rolling
@@ -1173,29 +1083,18 @@ object Windows {
     val li = Tables(s, d, "lineitem")
       .select(col("l_partkey"), col("l_extendedprice"), col("l_shipdate"),
         col("l_orderkey"), col("l_linenumber"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q265_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(li.repartition(3, col("l_partkey")))
-      val sdf = s.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            graft.operators.Events.bollingerScored(batch.toDF())
-              .groupBy(col("l_partkey"))
-              .agg(count(lit(1)).as("n_eval"),
-                sum(when(col("up"), lit(1L)).otherwise(lit(0L))).as("n_up"),
-                sum(when(col("down"), lit(1L)).otherwise(lit(0L))).as("n_down"))
-              .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    drain("q265", li.repartition(3, col("l_partkey"))) { tmp =>
+      (batch, batchId) =>
+        graft.operators.Events.bollingerScored(batch)
+          .groupBy(col("l_partkey"))
+          .agg(count(lit(1)).as("n_eval"),
+            sum(when(col("up"), lit(1L)).otherwise(lit(0L))).as("n_up"),
+            sum(when(col("down"), lit(1L)).otherwise(lit(0L))).as("n_down"))
+          .write.mode("overwrite").parquet(s"$tmp/summaries/batch=$batchId")
+    } { tmp =>
       val part = Tables(s, d, "part").select(col("p_partkey"), col("p_brand"))
       graft.Checkpoints.materialize(
-        s.read.parquet(sumDir)
+        s.read.parquet(s"$tmp/summaries")
           .join(broadcast(part), col("l_partkey") === col("p_partkey"))
           .groupBy(col("p_brand"))
           .agg(big(sum(col("n_eval"))).as("evaluated"),
@@ -1204,7 +1103,7 @@ object Windows {
             round((sum(col("n_up")) + sum(col("n_down"))).cast("double")
               / sum(col("n_eval")).cast("double"), 6).as("breakout_rate"))
           .orderBy(col("p_brand")))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q295: streaming EMA momentum signals — q290's 20-row EMA breakout
@@ -1224,28 +1123,17 @@ object Windows {
     val li = Tables(s, d, "lineitem")
       .select(col("l_partkey"), col("l_extendedprice"), col("l_shipdate"),
         col("l_orderkey"), col("l_linenumber"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q295_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(li.repartition(3, col("l_partkey")))
-      val sdf = s.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            graft.operators.Events.emaScored(batch.toDF())
-              .groupBy(col("l_partkey"))
-              .agg(count(lit(1)).as("n_eval"),
-                sum(when(col("sig"), lit(1L)).otherwise(lit(0L))).as("n_sig"))
-              .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    drain("q295", li.repartition(3, col("l_partkey"))) { tmp =>
+      (batch, batchId) =>
+        graft.operators.Events.emaScored(batch)
+          .groupBy(col("l_partkey"))
+          .agg(count(lit(1)).as("n_eval"),
+            sum(when(col("sig"), lit(1L)).otherwise(lit(0L))).as("n_sig"))
+          .write.mode("overwrite").parquet(s"$tmp/summaries/batch=$batchId")
+    } { tmp =>
       val part = Tables(s, d, "part").select(col("p_partkey"), col("p_brand"))
       graft.Checkpoints.materialize(
-        s.read.parquet(sumDir)
+        s.read.parquet(s"$tmp/summaries")
           .join(broadcast(part), col("l_partkey") === col("p_partkey"))
           .groupBy(col("p_brand"))
           .agg(big(sum(col("n_eval"))).as("evaluated"),
@@ -1253,7 +1141,7 @@ object Windows {
             round(sum(col("n_sig")).cast("double")
               / sum(col("n_eval")).cast("double"), 6).as("signal_rate"))
           .orderBy(col("p_brand")))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q300: streaming isotonic calibration — q296's PAV report maintained
@@ -1273,28 +1161,17 @@ object Windows {
       .select(col("event_type"), col("value"))
     val mm = graft.Checkpoints.materialize(
       ev.agg(min(col("value")).as("lo"), max(col("value")).as("hi")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q300_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ev.repartition(3))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            graft.operators.Stats.isotonicBins(batch.toDF(), mm)
-              .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    drain("q300", ev.repartition(3)) { tmp =>
+      (batch, batchId) =>
+        graft.operators.Stats.isotonicBins(batch, mm)
+          .write.mode("overwrite").parquet(s"$tmp/summaries/batch=$batchId")
+    } { tmp =>
       graft.Checkpoints.materialize(
         graft.operators.Stats.isotonicReport(
-          s.read.parquet(sumDir)
+          s.read.parquet(s"$tmp/summaries")
             .groupBy(col("bin"))
             .agg(sum(col("n")).as("n"), sum(col("k")).as("k"))))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q303: streaming maxsim top-k serving — q299's late-interaction rerank
@@ -1316,39 +1193,26 @@ object Windows {
       emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("pid"),
           graft.operators.Similarity.asDouble(col("embedding")).as("pv")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q303_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(emb.repartition(3))
-      val sdf = s.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val wB = org.apache.spark.sql.expressions.Window.partitionBy(col("pid"))
-        .orderBy(col("maxsim").desc, col("id"))
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            graft.operators.Similarity.maxsimScored(
-                batch.toDF().withColumn("ev",
-                  graft.operators.Similarity.asDouble(col("embedding"))),
-                probes)
-              .withColumn("rk", row_number().over(wB))
-              .filter(col("rk") <= 10)
-              .select(col("pid"), col("id"), col("maxsim"))
-              .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    val wB = org.apache.spark.sql.expressions.Window.partitionBy(col("pid"))
+      .orderBy(col("maxsim").desc, col("id"))
+    drain("q303", emb.repartition(3)) { tmp =>
+      (batch, batchId) =>
+        graft.operators.Similarity.maxsimScored(
+            batch.withColumn("ev",
+              graft.operators.Similarity.asDouble(col("embedding"))),
+            probes)
+          .withColumn("rk", row_number().over(wB))
+          .filter(col("rk") <= 10)
+          .select(col("pid"), col("id"), col("maxsim"))
+          .write.mode("overwrite").parquet(s"$tmp/summaries/batch=$batchId")
+    } { tmp =>
       graft.Checkpoints.materialize(
-        s.read.parquet(sumDir)
-          .withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("pid"))
-              .orderBy(col("maxsim").desc, col("id"))).cast("long"))
+        s.read.parquet(s"$tmp/summaries")
+          .withColumn("rank", row_number().over(wB).cast("long"))
           .filter(col("rank") <= 10)
           .select(col("pid"), col("id"), col("maxsim"), col("rank"))
           .orderBy(col("pid"), col("rank")))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q307: streaming negative sampling — q298's contrastive draws served
@@ -1370,36 +1234,25 @@ object Windows {
     val np = graft.Checkpoints.materialize(
       Tables(s, d, "part").agg(max(col("p_partkey")).as("np")))
     val cust = Tables(s, d, "customer").select(col("c_custkey").as("custkey"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q307_").toString
-    try {
-      val outDir = s"$tmp/negatives"
-      val feedDir = graft.Checkpoints.feedDirCached(cust.repartition(3))
-      val sdf = s.readStream.schema(cust.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            batch.toDF().crossJoin(broadcast(np))
-              .select(col("custkey"),
-                explode(sequence(lit(1L), lit(8L))).as("slot"), col("np"))
-              .withColumn("h1",
-                pmod(pmod(col("custkey") * 8L + col("slot"), lit(p)) * 48271L, lit(p)))
-              .withColumn("item",
-                pmod(pmod((col("h1") + 1L) * 16807L, lit(p)), col("np")) + 1L)
-              .join(inter, Seq("custkey", "item"), "left_anti")
-              .select(col("custkey"), col("slot"), col("item"))
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    drain("q307", cust.repartition(3)) { tmp =>
+      (batch, batchId) =>
+        batch.crossJoin(broadcast(np))
+          .select(col("custkey"),
+            explode(sequence(lit(1L), lit(8L))).as("slot"), col("np"))
+          .withColumn("h1",
+            pmod(pmod(col("custkey") * 8L + col("slot"), lit(p)) * 48271L, lit(p)))
+          .withColumn("item",
+            pmod(pmod((col("h1") + 1L) * 16807L, lit(p)), col("np")) + 1L)
+          .join(inter, Seq("custkey", "item"), "left_anti")
+          .select(col("custkey"), col("slot"), col("item"))
+          .write.mode("overwrite").parquet(s"$tmp/negatives/batch=$batchId")
+    } { tmp =>
       graft.Checkpoints.materialize(
-        s.read.parquet(outDir)
+        s.read.parquet(s"$tmp/negatives")
           .select(col("custkey"), big(col("slot")).as("slot"),
             big(col("item")).as("item"))
           .orderBy(col("custkey"), col("slot")))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q284: streaming Benford audit — q204's first-digit fraud monitor
@@ -1417,32 +1270,21 @@ object Windows {
     */
   def q284StreamBenford: Q = (s, d) => {
     val ord = Tables(s, d, "orders").select(col("o_totalprice"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q284_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ord.repartition(3))
-      val sdf = s.readStream.schema(ord.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            val cents = (graft.Dsl.dec(col("o_totalprice")) * 100).cast("long")
-            batch.toDF()
-              .select(cents.as("cents"))
-              .select(substring(expr("CAST(cents div 100 AS STRING)"), 1, 1)
-                .as("digit"))
-              .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-              .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    val cents = (graft.Dsl.dec(col("o_totalprice")) * 100).cast("long")
+    drain("q284", ord.repartition(3)) { tmp =>
+      (batch, batchId) =>
+        batch
+          .select(cents.as("cents"))
+          .select(substring(expr("CAST(cents div 100 AS STRING)"), 1, 1)
+            .as("digit"))
+          .groupBy(col("digit")).agg(count(lit(1)).as("n"))
+          .write.mode("overwrite").parquet(s"$tmp/summaries/batch=$batchId")
+    } { tmp =>
       graft.Checkpoints.materialize(
         graft.operators.Stats.benfordReport(
-          s.read.parquet(sumDir)
+          s.read.parquet(s"$tmp/summaries")
             .groupBy(col("digit")).agg(sum(col("n")).cast("long").as("n"))))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q288: streaming strict-funnel twin — q252's consecutive
@@ -1467,22 +1309,12 @@ object Windows {
   def q288StreamFunnel: Q = (s, d) => {
     val evs = Tables.events(s, d)
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts2"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q288_").toString
-    try {
-      val outDir = s"$tmp/per_user"
-      val feedDir = graft.Checkpoints.feedDirCached(evs.repartition(3, col("user_id")))
-      val sdf = s.readStream.schema(evs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty)
-            graft.operators.Events.strictFunnelPerUser(batch.toDF())
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val perUser = s.read.parquet(outDir)
+    drain("q288", evs.repartition(3, col("user_id"))) { tmp =>
+      (batch, batchId) =>
+        graft.operators.Events.strictFunnelPerUser(batch)
+          .write.mode("overwrite").parquet(s"$tmp/per_user/batch=$batchId")
+    } { tmp =>
+      val perUser = s.read.parquet(s"$tmp/per_user")
       graft.Checkpoints.materialize(
         perUser
           .crossJoin(broadcast(perUser.agg(count(lit(1)).as("n_users"))))
@@ -1490,7 +1322,7 @@ object Windows {
             big(col("first_completion_es")).as("first_completion_es"),
             big(col("n_users")).as("n_converting_users"))
           .orderBy(col("user_id")))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q320: streaming inter-rater-agreement twin — q315's Cohen's kappa
@@ -1509,30 +1341,19 @@ object Windows {
   def q320StreamKappa: Q = (s, d) => {
     val docs = graft.Tables(s, d, "documents")
       .select(col("source"), col("text"), col("n_chars"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q320_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(docs.repartition(3))
-      val sdf = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            graft.operators.Evaluation.raterLabels(batch.toDF())
-              .groupBy(col("source"), col("la"), col("lb"))
-              .agg(count(lit(1)).as("n"))
-              .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    drain("q320", docs.repartition(3)) { tmp =>
+      (batch, batchId) =>
+        graft.operators.Evaluation.raterLabels(batch)
+          .groupBy(col("source"), col("la"), col("lb"))
+          .agg(count(lit(1)).as("n"))
+          .write.mode("overwrite").parquet(s"$tmp/summaries/batch=$batchId")
+    } { tmp =>
       graft.Checkpoints.materialize(
         graft.operators.Evaluation.kappaFromConfusion(
-          s.read.parquet(sumDir)
+          s.read.parquet(s"$tmp/summaries")
             .groupBy(col("source"), col("la"), col("lb"))
             .agg(sum(col("n")).cast("long").as("n"))))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q326: streaming functional-dependency monitor — q319's g3 audit for
@@ -1556,29 +1377,18 @@ object Windows {
         col("o_orderstatus"), col("o_orderpriority"))
     val pairs = Seq(
       ("o_orderkey", "o_orderstatus"), ("o_custkey", "o_orderpriority"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q326_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ord.repartition(3))
-      val sdf = s.readStream.schema(ord.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            pairs.map { case (a, b) =>
-              batch.toDF()
-                .select(lit(a).as("det"), col(a).cast("string").as("A"),
-                  col(b).cast("string").as("B"))
-                .groupBy(col("det"), col("A"), col("B"))
-                .agg(count(lit(1)).as("c"))
-            }.reduce(_.unionByName(_))
-              .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val merged = s.read.parquet(sumDir)
+    drain("q326", ord.repartition(3)) { tmp =>
+      (batch, batchId) =>
+        pairs.map { case (a, b) =>
+          batch
+            .select(lit(a).as("det"), col(a).cast("string").as("A"),
+              col(b).cast("string").as("B"))
+            .groupBy(col("det"), col("A"), col("B"))
+            .agg(count(lit(1)).as("c"))
+        }.reduce(_.unionByName(_))
+          .write.mode("overwrite").parquet(s"$tmp/summaries/batch=$batchId")
+    } { tmp =>
+      val merged = s.read.parquet(s"$tmp/summaries")
         .groupBy(col("det"), col("A"), col("B"))
         .agg(sum(col("c")).as("c"))
       graft.Checkpoints.materialize(
@@ -1588,7 +1398,7 @@ object Windows {
             "orders", a, b)
         }.reduce(_.unionByName(_))
           .orderBy(col("rel"), col("determinant"), col("dependent")))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q329: streaming sample-ratio-mismatch monitor — q323's SRM audit
@@ -1603,32 +1413,21 @@ object Windows {
   def q329StreamSrm: Q = (s, d) => {
     val bk = graft.operators.TrainingOps.portableBucket(col("o_orderkey"))
     val ord = graft.Tables(s, d, "orders").select(col("o_orderkey"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q329_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ord.repartition(3))
-      val sdf = s.readStream.schema(ord.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            batch.toDF().select(bk.as("bk"))
-              .agg(count(lit(1)).as("n"),
-                sum(when(col("bk") % 2 === 0, 1L).otherwise(0L)).as("even"),
-                sum(when(col("bk") < 9000, 1L).otherwise(0L)).as("big"))
-              .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    drain("q329", ord.repartition(3)) { tmp =>
+      (batch, batchId) =>
+        batch.select(bk.as("bk"))
+          .agg(count(lit(1)).as("n"),
+            sum(when(col("bk") % 2 === 0, 1L).otherwise(0L)).as("even"),
+            sum(when(col("bk") < 9000, 1L).otherwise(0L)).as("big"))
+          .write.mode("overwrite").parquet(s"$tmp/summaries/batch=$batchId")
+    } { tmp =>
       graft.Checkpoints.materialize(
         graft.operators.Stats.srmReport(
-          s.read.parquet(sumDir).agg(
+          s.read.parquet(s"$tmp/summaries").agg(
             sum(col("n")).cast("long").as("n"),
             sum(col("even")).cast("long").as("even"),
             sum(col("big")).cast("long").as("big"))))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q337: streaming PSI monitor — q333's population-stability index
@@ -1648,41 +1447,25 @@ object Windows {
         graft.Dsl.dec(col("value")).as("v"))
     val mid = ev.agg(expr("(MIN(t) + MAX(t)) div 2").as("mid"))
       .head().getLong(0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q337_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ev.repartition(3))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q337Writer(mid, sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      q337Drain(s, sumDir)
-    } finally deleteRecursively(tmp)
+    drain("q337", ev.repartition(3))(tmp => q337Writer(mid, s"$tmp/summaries"))(tmp =>
+      q337Drain(s, s"$tmp/summaries"))
   }
 
-  /** q337's per-batch summary writer — each micro-batch lands its own
-    * per-bin (baseline, current) counts in an idempotent `batch=<id>`
-    * parquet dir, so a replayed batch after a crash OVERWRITES its own
-    * cell instead of double-counting. Named (not inline) so the restart
-    * spec drives the exact shipping writer through a checkpointed
-    * stop/start.
+  /** q337's per-batch summary writer: per-bin (baseline, current) counts
+    * under `batch=<id>` ([[drain]]'s sink contract). Named (not inline) so
+    * the restart spec drives the exact shipping writer through a
+    * checkpointed stop/start.
     */
   private[graft] def q337Writer(mid: Long, sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => {
-      if (!batch.isEmpty) {
-        batch.toDF()
-          .select(least(lit(9L), expr("CAST(v * 100 AS BIGINT) div 3300"))
-            .as("bin"), (col("t") >= lit(mid)).as("cur"))
-          .groupBy(col("bin"))
-          .agg(sum(when(!col("cur"), 1L).otherwise(0L)).as("nb"),
-            sum(when(col("cur"), 1L).otherwise(0L)).as("nc"))
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
-    }
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) =>
+      batch
+        .select(least(lit(9L), expr("CAST(v * 100 AS BIGINT) div 3300"))
+          .as("bin"), (col("t") >= lit(mid)).as("cur"))
+        .groupBy(col("bin"))
+        .agg(sum(when(!col("cur"), 1L).otherwise(0L)).as("nb"),
+          sum(when(col("cur"), 1L).otherwise(0L)).as("nc"))
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
 
   /** q337's drain: merge the additive per-batch cells (any slicing sums to
     * the same totals) and run the shared PSI kernel once.
@@ -1707,30 +1490,14 @@ object Windows {
   def q348StreamMannKendall: Q = (s, d) => {
     val ev = graft.Tables.events(s, d)
       .select(col("event_type"), expr("CAST(ts2 AS LONG) div 3600").as("h"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q348_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ev.repartition(3))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            batch.toDF()
-              .groupBy(col("event_type"), col("h"))
-              .agg(count(lit(1)).as("c"))
-              .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    // the (type, h) count cells q376 ships
+    drain("q348", ev.repartition(3))(tmp => q376Writer(s"$tmp/summaries")) { tmp =>
       graft.Checkpoints.materialize(
         graft.operators.Stats.mkReport(
-          s.read.parquet(sumDir)
+          s.read.parquet(s"$tmp/summaries")
             .groupBy(col("event_type"), col("h"))
             .agg(sum(col("c")).cast("long").as("c"))))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q354: streaming permutation-test monitor — q346's 32-permutation
@@ -1745,53 +1512,39 @@ object Windows {
   def q354StreamPermutation: Q = (s, d) => {
     val ev = graft.Tables.events(s, d)
       .select(col("event_id"), graft.Dsl.dec(col("value")).as("v"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q354_").toString
-    try {
-      val permDir = s"$tmp/perm"
-      val obsDir = s"$tmp/obs"
-      val feedDir = graft.Checkpoints.feedDirCached(ev.repartition(3))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q354Writer(permDir, obsDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      q354Drain(s, permDir, obsDir)
-    } finally deleteRecursively(tmp)
+    drain("q354", ev.repartition(3))(tmp => q354Writer(s"$tmp/perm", s"$tmp/obs"))(
+      tmp => q354Drain(s, s"$tmp/perm", s"$tmp/obs"))
   }
 
   /** q354's per-batch writer: per-rep pseudo-arm cells + observed-arm cells,
-    * each batch in its own idempotent `batch=<id>` dir (the q337 pattern).
+    * each batch in its own `batch=<id>` dir ([[drain]]'s sink contract).
     * Named so the restart spec can drive the shipping writer through a
     * checkpointed stop/start.
     */
   private[graft] def q354Writer(permDir: String, obsDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      : (Dataset[Row], Long) => Unit =
     (batch, batchId) => {
       val p = 2147483647L
-      if (!batch.isEmpty) {
-        // fan the 32× rep grid out of the single batch-file split (the
-        // q346 batch-side fix applied to the micro-batch kernel, opt r14)
-        val b = batch.toDF().repartition(
-          batch.sparkSession.sparkContext.defaultParallelism, col("event_id"))
-        val reps = b.sparkSession.range(1L, 33L).toDF("rep")
-        val permArm = pmod((pmod(pmod(col("event_id") + col("rep"),
-          lit(p)) * 48271L, lit(p)) + 1L) * 16807L, lit(p)) % 2 === 0
-        b.crossJoin(broadcast(reps))
-          .select(col("rep"), permArm.as("a"), col("v"))
-          .groupBy(col("rep"))
-          .agg(sum(when(col("a"), 1L).otherwise(0L)).cast("long").as("pna"),
-            sum(when(col("a"), col("v"))).as("psva"),
-            sum(when(!col("a"), 1L).otherwise(0L)).cast("long").as("pnb"),
-            sum(when(!col("a"), col("v"))).as("psvb"))
-          .write.mode("overwrite").parquet(s"$permDir/batch=$batchId")
-        b.select((graft.operators.TrainingOps
-          .portableBucket(col("event_id")) % 2 === 0).as("a"), col("v"))
-          .groupBy(col("a"))
-          .agg(count(lit(1)).cast("long").as("n"), sum(col("v")).as("sv"))
-          .write.mode("overwrite").parquet(s"$obsDir/batch=$batchId")
-      }
-      ()
+      // fan the 32× rep grid out of the single batch-file split (the
+      // q346 batch-side fix applied to the micro-batch kernel, opt r14)
+      val b = batch.repartition(
+        batch.sparkSession.sparkContext.defaultParallelism, col("event_id"))
+      val reps = b.sparkSession.range(1L, 33L).toDF("rep")
+      val permArm = pmod((pmod(pmod(col("event_id") + col("rep"),
+        lit(p)) * 48271L, lit(p)) + 1L) * 16807L, lit(p)) % 2 === 0
+      b.crossJoin(broadcast(reps))
+        .select(col("rep"), permArm.as("a"), col("v"))
+        .groupBy(col("rep"))
+        .agg(sum(when(col("a"), 1L).otherwise(0L)).cast("long").as("pna"),
+          sum(when(col("a"), col("v"))).as("psva"),
+          sum(when(!col("a"), 1L).otherwise(0L)).cast("long").as("pnb"),
+          sum(when(!col("a"), col("v"))).as("psvb"))
+        .write.mode("overwrite").parquet(s"$permDir/batch=$batchId")
+      b.select((graft.operators.TrainingOps
+        .portableBucket(col("event_id")) % 2 === 0).as("a"), col("v"))
+        .groupBy(col("a"))
+        .agg(count(lit(1)).cast("long").as("n"), sum(col("v")).as("sv"))
+        .write.mode("overwrite").parquet(s"$obsDir/batch=$batchId")
     }
 
   /** q354's drain: re-sum the mergeable cells and run the shared
@@ -1830,33 +1583,19 @@ object Windows {
       .select(graft.Dsl.epochSec(col("ts2")).as("ts"),
         (graft.Dsl.dec(col("value")) * 100).cast("long").as("c"))
     val mid = ev.agg(expr("(MIN(ts) + MAX(ts)) div 2")).head().getLong(0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q375_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ev.repartition(3))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q375Writer(mid, sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      q375Drain(s, sumDir)
-    } finally deleteRecursively(tmp)
+    drain("q375", ev.repartition(3))(tmp => q375Writer(mid, s"$tmp/summaries"))(tmp =>
+      q375Drain(s, s"$tmp/summaries"))
   }
 
-  /** q375's per-batch writer (the q337 idempotent `batch=<id>` pattern). */
+  /** q375's per-batch writer ([[drain]]'s sink contract). */
   private[graft] def q375Writer(mid: Long, sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => {
-      if (!batch.isEmpty) {
-        batch.toDF()
-          .groupBy(col("c"))
-          .agg(sum(when(col("ts") < mid, 1L).otherwise(0L)).as("c1"),
-            sum(when(col("ts") >= mid, 1L).otherwise(0L)).as("c2"))
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
-    }
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) =>
+      batch
+        .groupBy(col("c"))
+        .agg(sum(when(col("ts") < mid, 1L).otherwise(0L)).as("c1"),
+          sum(when(col("ts") >= mid, 1L).otherwise(0L)).as("c2"))
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
 
   /** q375's drain: merge the additive cent cells, run the W₁ kernel once. */
   private[graft] def q375Drain(s: SparkSession, sumDir: String): DataFrame =
@@ -1881,18 +1620,8 @@ object Windows {
       .select(graft.Dsl.epochSec(col("ts2")).as("ts"),
         (graft.Dsl.dec(col("value")) * 100).cast("long").as("c"))
     val mid = ev.agg(expr("(MIN(ts) + MAX(ts)) div 2")).head().getLong(0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q465_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ev.repartition(3))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q375Writer(mid, sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      q465Drain(s, sumDir)
-    } finally deleteRecursively(tmp)
+    drain("q465", ev.repartition(3))(tmp => q375Writer(mid, s"$tmp/summaries"))(tmp =>
+      q465Drain(s, s"$tmp/summaries"))
   }
 
   /** q465's drain: merge the additive cent cells, run q452's exact energy
@@ -1920,32 +1649,18 @@ object Windows {
       .select(col("c_nationkey").cast("long").as("nk"),
         col("c_mktsegment").as("seg"),
         floor(col("c_acctbal").cast("double") / lit(1000.0)).cast("long").as("b"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q469_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(base.repartition(3))
-      val sdf = s.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q469Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      q469Drain(s, sumDir)
-    } finally deleteRecursively(tmp)
+    drain("q469", base.repartition(3))(tmp => q469Writer(s"$tmp/summaries"))(tmp =>
+      q469Drain(s, s"$tmp/summaries"))
   }
 
-  /** q469's per-batch writer (the q337 idempotent `batch=<id>` pattern). */
+  /** q469's per-batch writer ([[drain]]'s sink contract). */
   private[graft] def q469Writer(sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => {
-      if (!batch.isEmpty) {
-        batch.toDF()
-          .groupBy(col("nk"), col("seg"), col("b"))
-          .agg(count(lit(1)).as("cb"))
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
-    }
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) =>
+      batch
+        .groupBy(col("nk"), col("seg"), col("b"))
+        .agg(count(lit(1)).as("cb"))
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
 
   /** q469's drain: merge the additive class×bucket cells, run q466's
     * kernel once.
@@ -1969,18 +1684,8 @@ object Windows {
   def q477StreamSpectralEntropy: Q = (s, d) => {
     val ev = graft.Tables.events(s, d)
       .select(col("event_type"), expr("CAST(ts2 AS LONG) div 3600").as("h"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q477_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ev.repartition(3))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q376Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      q477Drain(s, sumDir)
-    } finally deleteRecursively(tmp)
+    drain("q477", ev.repartition(3))(tmp => q376Writer(s"$tmp/summaries"))(tmp =>
+      q477Drain(s, s"$tmp/summaries"))
   }
 
   /** q477's drain: merge hourly cells, run q471's spectral kernel once. */
@@ -2004,31 +1709,17 @@ object Windows {
   def q484StreamGmm: Q = (s, d) => {
     val ev = graft.Tables.events(s, d)
       .select((graft.Dsl.dec(col("value")) * 100).cast("long").as("c"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q484_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ev.repartition(3))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q484Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      q484Drain(s, sumDir)
-    } finally deleteRecursively(tmp)
+    drain("q484", ev.repartition(3))(tmp => q484Writer(s"$tmp/summaries"))(tmp =>
+      q484Drain(s, s"$tmp/summaries"))
   }
 
-  /** q484's per-batch writer (the q337 idempotent `batch=<id>` pattern). */
+  /** q484's per-batch writer ([[drain]]'s sink contract). */
   private[graft] def q484Writer(sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => {
-      if (!batch.isEmpty) {
-        batch.toDF()
-          .groupBy(col("c")).agg(count(lit(1)).as("t"))
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
-    }
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) =>
+      batch
+        .groupBy(col("c")).agg(count(lit(1)).as("t"))
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
 
   /** q484's drain: merge the additive cent cells, run q481's EM once. */
   private[graft] def q484Drain(s: SparkSession, sumDir: String): DataFrame =
@@ -2053,18 +1744,8 @@ object Windows {
         .cast("long").as("x"),
         col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2))
           .as("p"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q498_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ord.repartition(3))
-      val sdf = s.readStream.schema(ord.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q437Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      graft.Checkpoints.materialize(q498Drain(s, sumDir))
-    } finally deleteRecursively(tmp)
+    drain("q498", ord.repartition(3))(tmp => q437Writer(s"$tmp/summaries"))(tmp =>
+      graft.Checkpoints.materialize(q498Drain(s, s"$tmp/summaries")))
   }
 
   /** q498's drain: merge day cells additively, run q490's CUSUM kernel. */
@@ -2086,18 +1767,8 @@ object Windows {
         .cast("long").as("x"),
         col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2))
           .as("p"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q499_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ord.repartition(3))
-      val sdf = s.readStream.schema(ord.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q437Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      graft.Checkpoints.materialize(q499Drain(s, sumDir))
-    } finally deleteRecursively(tmp)
+    drain("q499", ord.repartition(3))(tmp => q437Writer(s"$tmp/summaries"))(tmp =>
+      graft.Checkpoints.materialize(q499Drain(s, s"$tmp/summaries")))
   }
 
   /** q499's drain: merge day cells, run q487's profile kernel once. */
@@ -2120,31 +1791,17 @@ object Windows {
         .cast("long").as("x"),
         col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2))
           .as("p"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q500_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ord.repartition(3))
-      val sdf = s.readStream.schema(ord.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q500Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      graft.Checkpoints.materialize(q500Drain(s, sumDir))
-    } finally deleteRecursively(tmp)
+    drain("q500", ord.repartition(3))(tmp => q500Writer(s"$tmp/summaries"))(tmp =>
+      graft.Checkpoints.materialize(q500Drain(s, s"$tmp/summaries")))
   }
 
   /** q500's per-batch writer: q437's day cells plus the order count. */
   private[graft] def q500Writer(sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => {
-      if (!batch.isEmpty) {
-        batch.toDF().groupBy(col("x"))
-          .agg(sum(col("p")).as("r"), count(lit(1)).as("cnt"))
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
-    }
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) =>
+      batch.groupBy(col("x"))
+        .agg(sum(col("p")).as("r"), count(lit(1)).as("cnt"))
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
 
   /** q500's drain: merge (revenue, count) day cells, run q494's OLS. */
   private[graft] def q500Drain(s: SparkSession, sumDir: String): DataFrame =
@@ -2165,32 +1822,20 @@ object Windows {
   def q376StreamEwma: Q = (s, d) => {
     val ev = graft.Tables.events(s, d)
       .select(col("event_type"), expr("CAST(ts2 AS LONG) div 3600").as("h"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q376_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ev.repartition(3))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q376Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      q376Drain(s, sumDir)
-    } finally deleteRecursively(tmp)
+    drain("q376", ev.repartition(3))(tmp => q376Writer(s"$tmp/summaries"))(tmp =>
+      q376Drain(s, s"$tmp/summaries"))
   }
 
-  /** q376's per-batch writer (the q348 hourly-cell pattern). */
+  /** q376's per-batch writer: (type, hour) count cells, also q348's,
+    * q390's and q477's.
+    */
   private[graft] def q376Writer(sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => {
-      if (!batch.isEmpty) {
-        batch.toDF()
-          .groupBy(col("event_type"), col("h"))
-          .agg(count(lit(1)).as("c"))
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
-    }
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) =>
+      batch
+        .groupBy(col("event_type"), col("h"))
+        .agg(count(lit(1)).as("c"))
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
 
   /** q376's drain: merge hourly cells, run the EWMA kernel once. */
   private[graft] def q376Drain(s: SparkSession, sumDir: String): DataFrame =
@@ -2211,22 +1856,14 @@ object Windows {
   def q390StreamRuns: Q = (s, d) => {
     val ev = graft.Tables.events(s, d)
       .select(col("event_type"), expr("CAST(ts2 AS LONG) div 3600").as("h"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q390_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ev.repartition(3))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q376Writer(sumDir)) // same (type, h) count cells
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    // same (type, h) count cells as q376
+    drain("q390", ev.repartition(3))(tmp => q376Writer(s"$tmp/summaries")) { tmp =>
       graft.Checkpoints.materialize(
         graft.operators.Events.runsReport(
-          s.read.parquet(sumDir)
+          s.read.parquet(s"$tmp/summaries")
             .groupBy(col("event_type"), col("h"))
             .agg(sum(col("c")).cast("long").as("c"))))
-    } finally deleteRecursively(tmp)
+    }
   }
 
   /** Q417: streaming Page–Hinkley drift monitor — q400's sequential
@@ -2242,33 +1879,19 @@ object Windows {
     val ev = graft.Tables.events(s, d)
       .select(datediff(col("ts2").cast("date"), lit("2024-01-01").cast("date"))
         .cast("long").as("x"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q417_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ev.repartition(3))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q417Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      graft.Checkpoints.materialize(q417Drain(s, sumDir))
-    } finally deleteRecursively(tmp)
+    drain("q417", ev.repartition(3))(tmp => q417Writer(s"$tmp/summaries"))(tmp =>
+      graft.Checkpoints.materialize(q417Drain(s, s"$tmp/summaries")))
   }
 
   /** q417's per-batch writer: one additive (day, count, exact value-sum)
     * cell relation per micro-batch under an idempotent `batch=<id>` sink.
     */
   private[graft] def q417Writer(sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => {
-      if (!batch.isEmpty) {
-        batch.toDF().groupBy(col("x"))
-          .agg(count(lit(1)).as("c"), sum(dec(col("value"))).as("sv"))
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
-    }
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) =>
+      batch.groupBy(col("x"))
+        .agg(count(lit(1)).as("c"), sum(dec(col("value"))).as("sv"))
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
 
   /** q417's drain: merge day cells additively, run q400's PH kernel once. */
   private[graft] def q417Drain(s: SparkSession, sumDir: String): DataFrame =
@@ -2288,32 +1911,19 @@ object Windows {
     */
   def q418StreamJsDrift: Q = (s, d) => {
     val docs = Tables(s, d, "documents").select(col("source"), col("text"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q418_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(docs.repartition(3))
-      val sdf = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q418Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      graft.Checkpoints.materialize(q418Drain(s, sumDir))
-    } finally deleteRecursively(tmp)
+    drain("q418", docs.repartition(3))(tmp => q418Writer(s"$tmp/summaries"))(tmp =>
+      graft.Checkpoints.materialize(q418Drain(s, s"$tmp/summaries")))
   }
 
   /** q418's per-batch writer: additive (source, token, count) cells. */
   private[graft] def q418Writer(sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      : (Dataset[Row], Long) => Unit =
     (batch, batchId) => {
-      if (!batch.isEmpty) {
-        val toksW = filter(split(col("text"), " "), t => t =!= "")
-        batch.toDF().select(col("source"), explode(toksW).as("tok"))
-          .groupBy(col("source"), col("tok"))
-          .agg(count(lit(1)).as("c"))
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
+      val toksW = filter(split(col("text"), " "), t => t =!= "")
+      batch.select(col("source"), explode(toksW).as("tok"))
+        .groupBy(col("source"), col("tok"))
+        .agg(count(lit(1)).as("c"))
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
     }
 
   /** q418's drain: merge token cells additively, run q402's JS kernel once. */
@@ -2334,32 +1944,18 @@ object Windows {
     val ev = graft.Tables.events(s, d)
       .select(datediff(col("ts2").cast("date"), lit("2024-01-01").cast("date"))
         .cast("long").as("x"), col("event_type"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q434_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ev.repartition(3))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q434Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      graft.Checkpoints.materialize(q434Drain(s, sumDir))
-    } finally deleteRecursively(tmp)
+    drain("q434", ev.repartition(3))(tmp => q434Writer(s"$tmp/summaries"))(tmp =>
+      graft.Checkpoints.materialize(q434Drain(s, s"$tmp/summaries")))
   }
 
   /** q434's per-batch writer: additive (day, clicks, purchases) cells. */
   private[graft] def q434Writer(sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => {
-      if (!batch.isEmpty) {
-        batch.toDF().groupBy(col("x"))
-          .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("a"),
-            sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("b"))
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
-    }
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) =>
+      batch.groupBy(col("x"))
+        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("a"),
+          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("b"))
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
 
   /** q434's drain: merge day cells additively, run q424's kernel once. */
   private[graft] def q434Drain(s: SparkSession, sumDir: String): DataFrame =
@@ -2381,31 +1977,17 @@ object Windows {
         .cast("long").as("x"),
         col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2))
           .as("p"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q437_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ord.repartition(3))
-      val sdf = s.readStream.schema(ord.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q437Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      graft.Checkpoints.materialize(q437Drain(s, sumDir))
-    } finally deleteRecursively(tmp)
+    drain("q437", ord.repartition(3))(tmp => q437Writer(s"$tmp/summaries"))(tmp =>
+      graft.Checkpoints.materialize(q437Drain(s, s"$tmp/summaries")))
   }
 
   /** q437's per-batch writer: additive (day, exact revenue-sum) cells. */
   private[graft] def q437Writer(sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => {
-      if (!batch.isEmpty) {
-        batch.toDF().groupBy(col("x"))
-          .agg(sum(col("p")).as("r"))
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
-    }
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) =>
+      batch.groupBy(col("x"))
+        .agg(sum(col("p")).as("r"))
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
 
   /** q437's drain: merge day cells additively, run q393's LB kernel once. */
   private[graft] def q437Drain(s: SparkSession, sumDir: String): DataFrame =
@@ -2426,18 +2008,8 @@ object Windows {
         .cast("long").as("x"),
         col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2))
           .as("p"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q441_").toString
-    try {
-      val sumDir = s"$tmp/summaries"
-      val feedDir = graft.Checkpoints.feedDirCached(ord.repartition(3))
-      val sdf = s.readStream.schema(ord.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q437Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      graft.Checkpoints.materialize(q441Drain(s, sumDir))
-    } finally deleteRecursively(tmp)
+    drain("q441", ord.repartition(3))(tmp => q437Writer(s"$tmp/summaries"))(tmp =>
+      graft.Checkpoints.materialize(q441Drain(s, s"$tmp/summaries")))
   }
 
   /** q441's drain: merge day cells additively, run q397's R/S kernel. */
@@ -2460,30 +2032,16 @@ object Windows {
   def q514StreamScriptProfile: Q = (s, d) => {
     val docs = Tables(s, d, "documents").select(col("source"), col("text"))
       .unionByName(graft.operators.Text.scriptBattery(s))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q514_").toString
-    try {
-      val sumDir = s"$tmp/cells"
-      val feedDir = graft.Checkpoints.feedDirCached(docs.repartition(3))
-      val sdf = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q514Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      q514Drain(s, sumDir)
-    } finally deleteRecursively(tmp)
+    drain("q514", docs.repartition(3))(tmp => q514Writer(s"$tmp/cells"))(tmp =>
+      q514Drain(s, s"$tmp/cells"))
   }
 
-  /** q514's per-batch writer (the q337 idempotent `batch=<id>` pattern). */
+  /** q514's per-batch writer ([[drain]]'s sink contract). */
   private[graft] def q514Writer(sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => {
-      if (!batch.isEmpty) {
-        graft.operators.Text.scriptCells(batch.toDF())
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
-    }
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) =>
+      graft.operators.Text.scriptCells(batch)
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
 
   /** q514's drain: merge the additive script cells, report once. */
   private[graft] def q514Drain(s: SparkSession, sumDir: String): DataFrame =
@@ -2501,30 +2059,16 @@ object Windows {
   def q515StreamMixedScript: Q = (s, d) => {
     val docs = Tables(s, d, "documents").select(col("source"), col("text"))
       .unionByName(graft.operators.Text.homoglyphBattery(s))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q515_").toString
-    try {
-      val sumDir = s"$tmp/cells"
-      val feedDir = graft.Checkpoints.feedDirCached(docs.repartition(3))
-      val sdf = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q515Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      q515Drain(s, sumDir)
-    } finally deleteRecursively(tmp)
+    drain("q515", docs.repartition(3))(tmp => q515Writer(s"$tmp/cells"))(tmp =>
+      q515Drain(s, s"$tmp/cells"))
   }
 
   /** q515's per-batch writer. */
   private[graft] def q515Writer(sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => {
-      if (!batch.isEmpty) {
-        graft.operators.Text.mixedScriptCells(batch.toDF())
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
-    }
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) =>
+      graft.operators.Text.mixedScriptCells(batch)
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
 
   /** q515's drain: merge the token/mixed/min cells, report once. */
   private[graft] def q515Drain(s: SparkSession, sumDir: String): DataFrame =
@@ -2545,30 +2089,16 @@ object Windows {
   def q521StreamTokenBudget: Q = (s, d) => {
     val docs = Tables(s, d, "documents").select(col("source"), col("text"))
       .unionByName(graft.operators.Text.tokenBudgetBattery(s))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q521_").toString
-    try {
-      val sumDir = s"$tmp/cells"
-      val feedDir = graft.Checkpoints.feedDirCached(docs.repartition(3))
-      val sdf = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q521Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      q521Drain(s, sumDir)
-    } finally deleteRecursively(tmp)
+    drain("q521", docs.repartition(3))(tmp => q521Writer(s"$tmp/cells"))(tmp =>
+      q521Drain(s, s"$tmp/cells"))
   }
 
-  /** q521's per-batch writer (the q337 idempotent `batch=<id>` pattern). */
+  /** q521's per-batch writer ([[drain]]'s sink contract). */
   private[graft] def q521Writer(sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => {
-      if (!batch.isEmpty) {
-        graft.operators.Text.tokenBudgetCells(batch.toDF())
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
-    }
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) =>
+      graft.operators.Text.tokenBudgetCells(batch)
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
 
   /** q521's drain: merge the additive budget cells, report once. */
   private[graft] def q521Drain(s: SparkSession, sumDir: String): DataFrame =
@@ -2588,30 +2118,16 @@ object Windows {
     val docs = Tables(s, d, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("lang"), col("text"))
       .unionByName(graft.operators.Text.langScriptBattery(s))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q524_").toString
-    try {
-      val sumDir = s"$tmp/cells"
-      val feedDir = graft.Checkpoints.feedDirCached(docs.repartition(3))
-      val sdf = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      val q = sdf.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch(q524Writer(sumDir))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      q524Drain(s, sumDir)
-    } finally deleteRecursively(tmp)
+    drain("q524", docs.repartition(3))(tmp => q524Writer(s"$tmp/cells"))(tmp =>
+      q524Drain(s, s"$tmp/cells"))
   }
 
-  /** q524's per-batch writer (the q337 idempotent `batch=<id>` pattern). */
+  /** q524's per-batch writer ([[drain]]'s sink contract). */
   private[graft] def q524Writer(sumDir: String)
-      : (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) => {
-      if (!batch.isEmpty) {
-        graft.operators.Text.langScriptCells(batch.toDF())
-          .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
-      }
-      ()
-    }
+      : (Dataset[Row], Long) => Unit =
+    (batch, batchId) =>
+      graft.operators.Text.langScriptCells(batch)
+        .write.mode("overwrite").parquet(s"$sumDir/batch=$batchId")
 
   /** q524's drain: merge the audit cells, report once. */
   private[graft] def q524Drain(s: SparkSession, sumDir: String): DataFrame =

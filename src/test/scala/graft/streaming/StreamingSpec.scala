@@ -243,16 +243,79 @@ class StreamingSpec extends SparkSpec {
   test("q121 drain with no match returns an empty record with q116's columns and types") {
     val corpus = Seq((0L, "a b c d e f g h"), (1L, "p q r s t u v w")).toDF("doc_id", "text")
     val index = graft.dedup.JaccardJoin.buildIndex(corpus, "doc_id", "text", 1L, 2L)
-    val want = graft.operators.NorthStar.q116IncrementalDedup(spark, sf0001).schema
-      .map(f => (f.name, f.dataType))
+    def columns(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
     val unmatched = Seq((100L, "x y z w v u"), (101L, "k l m n o")).toDF("doc_id", "text")
-    // batches arrive and none matches; no batch arrives, so only the seed
-    // batch is read back
-    Seq(unmatched, unmatched.limit(0)).foreach { delta =>
-      val got = Windows.probeDrain(index, delta)
+    // q121's probe drain against q116's record, q155's ingest drain against
+    // q123's: batches arrive and none matches; no batch arrives, so only
+    // the seed batch is read back
+    val drains = Seq(
+      (Windows.probeDrain(index, _: org.apache.spark.sql.DataFrame),
+        columns(graft.operators.NorthStar.q116IncrementalDedup(spark, sf0001))),
+      (Windows.ingestDrain(index, _: org.apache.spark.sql.DataFrame),
+        columns(graft.operators.NorthStar.q123IncrementalDedupFull(spark, sf0001))))
+    for ((drainOf, want) <- drains; delta <- Seq(unmatched, unmatched.limit(0))) {
+      val got = drainOf(delta)
       assert(got.isEmpty)
-      assert(got.schema.map(f => (f.name, f.dataType)) === want)
+      assert(columns(got) === want)
     }
+  }
+
+  test("drain: empty batches never reach the writer; the temp dir goes, also when the writer throws") {
+    import scala.jdk.CollectionConverters._
+    val rows = spark.range(0L, 60L).toDF("k")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    var tmpSeen = ""
+    def recordingDrain(feed: org.apache.spark.sql.DataFrame) = {
+      seen.clear()
+      tmpSeen = ""
+      Windows.drain("drain_contract", feed) { tmp =>
+        tmpSeen = tmp
+        (batch, batchId) => {
+          seen.add(batch.count())
+          batch.write.mode("overwrite").parquet(s"$tmp/out/batch=$batchId")
+        }
+      } { tmp =>
+        val out = new java.io.File(s"$tmp/out")
+        if (out.exists()) graft.Checkpoints.materialize(spark.read.parquet(out.getPath).drop("batch"))
+        else rows.limit(0)
+      }
+    }
+    def tmpGone(when: String) =
+      assert(tmpSeen.nonEmpty && !new java.io.File(tmpSeen).exists(),
+        s"temp dir left behind after $when: $tmpSeen")
+
+    // a 3-file feed: every row reaches the writer, in non-empty batches
+    val got = recordingDrain(rows.repartition(3, $"k"))
+    assert(seen.asScala.forall(_ > 0L) && seen.asScala.sum === 60L, s"batches: $seen")
+    assert(got.as[Long].collect().sorted.toSeq === (0L until 60L))
+    tmpGone("a normal drain")
+
+    // an empty feed is one schema-only file, which the file source delivers
+    // as an empty micro-batch; the writer must not see it
+    val empty = rows.limit(0)
+    val delivered = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val raw = spark.readStream.schema(empty.schema)
+      .option("maxFilesPerTrigger", "1").parquet(graft.Checkpoints.feedDirCached(empty))
+      .writeStream.foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        delivered.add(b.count()); ()
+      }.start()
+    try raw.processAllAvailable() finally raw.stop()
+    assert(delivered.asScala.toSeq === Seq(0L), s"expected one empty batch, got $delivered")
+    assert(recordingDrain(empty).isEmpty)
+    assert(seen.isEmpty, s"the writer saw an empty batch: $seen")
+    tmpGone("a drain of empty batches")
+
+    tmpSeen = ""
+    val boom =intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Windows.drain("drain_contract", rows.repartition(3, $"k")) { tmp =>
+        tmpSeen = tmp
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$tmp/out"))
+        (_, _) => throw new IllegalStateException("writer failed")
+      } { _ => fail("finish must not run after a failed drain") }
+    }
+    assert(Iterator.iterate[Throwable](boom)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "writer failed"), s"writer exception lost: $boom")
+    tmpGone("a failed drain")
   }
 
   test("q152 streaming decontam equals q119's batch answer; sink idempotent under redelivery") {
@@ -1037,7 +1100,7 @@ class StreamingSpec extends SparkSpec {
             .option("maxFilesPerTrigger", "1").parquet(feedDir)
             .writeStream.outputMode(OutputMode.Append)
             .option("checkpointLocation", ckpt)
-            .foreachBatch(writer)
+            .foreachBatch(Windows.nonEmptyBatches(writer))
             .start()
           feed.filter(tc.firstTranche).coalesce(1)
             .write.mode("append").parquet(feedDir)
