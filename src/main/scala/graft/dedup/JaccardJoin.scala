@@ -366,43 +366,17 @@ object JaccardJoin {
       graft.Checkpoints.materialize(index.sh),
       index.tNum, index.tDen, index.shingleWidth, frozenFolds = 0)
 
-  private final case class IndexKey(session: String, semanticHash: Int,
-                                    idCol: String, textCol: String,
-                                    tNum: Long, tDen: Long, shingleWidth: Int)
-
-  // same shape as Ann's IVF index cache: entries hold materialized
-  // (lineage-cut) relations, at most 8 retained, LRU; the key is the
-  // canonicalized corpus PLAN (semanticHash + sameSemantics to rule out
-  // collisions), not a data snapshot — clearIndexCache() after overwriting
-  // the files behind the plan
-  private val indexCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[IndexKey, (DataFrame, Index)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[IndexKey, (DataFrame, Index)]): Boolean =
-        size() > 8
-    })
-
-  /** Build-once view of [[buildIndex]]: memoizes per (session, corpus plan,
-    * params) so repeated probes in one session — a streaming drain's
-    * micro-batches, a sweep running several delta checks — pay the corpus
-    * shingling/ranking once.
+  /** Build-once view of [[buildIndex]]: repeated probes in one session — a
+    * streaming drain's micro-batches, a sweep running several delta checks —
+    * pay the corpus shingling/ranking once. Memoized per (corpus plan,
+    * params) under the [[graft.Checkpoints]] session-memo contract.
     */
   def buildIndexCached(corpus: DataFrame, idCol: String, textCol: String,
-                       tNum: Long, tDen: Long, shingleWidth: Int = 3): Index = {
-    val key = IndexKey(System.identityHashCode(corpus.sparkSession).toString,
-      corpus.semanticHash(), idCol, textCol, tNum, tDen, shingleWidth)
-    val hit = indexCache.get(key)
-    if (hit != null && (hit._1.sparkSession eq corpus.sparkSession) &&
-        hit._1.sameSemantics(corpus)) hit._2
-    else {
-      val built = buildIndex(corpus, idCol, textCol, tNum, tDen, shingleWidth)
-      indexCache.put(key, (corpus, built))
-      built
+                       tNum: Long, tDen: Long, shingleWidth: Int = 3): Index =
+    graft.Checkpoints.memo(corpus.sparkSession,
+        s"jaccard|$idCol|$textCol|$tNum|$tDen|$shingleWidth", Some(corpus)) {
+      buildIndex(corpus, idCol, textCol, tNum, tDen, shingleWidth)
     }
-  }
-
-  /** Drop every memoized index (use after overwriting an input table). */
-  def clearIndexCache(): Unit = indexCache.clear()
 
   /** Exact-Jaccard pairs between a (small) delta and a prebuilt corpus
     * index: (delta id, corpus id, inter, n1, n2, jaccard ≥ tNum/tDen).

@@ -553,8 +553,8 @@ object NorthStar {
     * .materializeCached]]: per-run materialization was the round-7 `weak`
     * finding — orphaned localCheckpoint copies accumulating across runs
     * until the async ContextCleaner raced the next run, a 6x same-JVM
-    * runtime spread with zero correctness impact (full adjudication at
-    * [[graft.tools.DebugQ119]]). Steady state now measures the membership
+    * runtime spread with zero correctness impact (adjudicated with a
+    * same-JVM q119 probe, BENCH.md). Steady state now measures the membership
     * join against the standing set, the shape q125 already declares for
     * the Jaccard index.
     */

@@ -623,7 +623,7 @@ object Similarity {
     */
   def q188IvfPq: Q = (s, d) =>
     // nprobe=8 / shortlist=200 / replicas=2 is the measured knee of the
-    // round-10 recall/cost sweep (tools.DebugIvfPq; curve in BENCH.md):
+    // round-10 recall/cost sweep (curve in BENCH.md):
     // recall@10 0.62→0.84 at sf0.1 (0.68→0.98 at sf0.01) over the round-9
     // (4, 50, 2) config, with runtime flat (2.9→2.1 s at sf0.1) and NO
     // index-size increase — the alternative path to ≥0.86, replicas=4,
@@ -632,9 +632,9 @@ object Similarity {
     // vectors per probe — still a bounded re-rank. PqSpec pins the floor.
     ivfPqReport(s, d, nprobe = 8, shortlist = 200, replicas = 2)
 
-  /** Parameterized q188 kernel — the sweep harness (tools.DebugIvfPq) and
-    * the declared query share one implementation so the published
-    * recall/cost curve measures exactly the shipping pipeline.
+  /** Parameterized q188 kernel — the round-10 sweep ran this same
+    * implementation, so the published recall/cost curve (BENCH.md) measures
+    * exactly the shipping pipeline.
     */
   private[graft] def ivfPqReport(s: SparkSession, d: String, nprobe: Int,
                                  shortlist: Int, replicas: Int): DataFrame = {

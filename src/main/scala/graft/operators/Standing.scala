@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions.col
 /** Registry of the library's STANDING relations — the session-memoized
   * build-once artifacts (co-purchase graph, decontamination n-gram sets,
   * positional postings, IVF/PQ indexes, Jaccard prefix index) that queries
-  * share via [[graft.Checkpoints.materializeCached]] and the per-family
-  * index caches.
+  * share through the one session memo in [[graft.Checkpoints]].
   *
   * Why a registry (round-10 VERDICT, "Next" #3): in a bench sweep the cost
   * of each standing build lands on whichever query happens to run FIRST, so
@@ -20,7 +19,7 @@ import org.apache.spark.sql.functions.col
   * the online path).
   *
   * Each entry calls the SAME factored builder its consuming queries call,
-  * so the semantics-keyed caches are guaranteed to hit (a re-derived plan
+  * so the semantics-keyed memo is guaranteed to hit (a re-derived plan
   * with a different semanticHash would silently double-build).
   */
 object Standing {

@@ -1631,8 +1631,8 @@ object Text {
     *
     * Scale shape: one block histogram (the q205-style gate, INSIDE the
     * operator), two block-keyed equi-joins over disjoint member sets,
-    * TakeOrdered(20). DebugWaveScale runs this next to q258 so the slope
-    * difference is measured, not asserted.
+    * TakeOrdered(20). The round-8 4× volume stress ran this next to q258
+    * (BENCH.md) so the slope difference is measured, not asserted.
     */
   def q272FuzzyJoinCapped: Q = (s, d) => {
     val cap = 64L

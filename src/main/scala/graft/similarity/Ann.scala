@@ -158,51 +158,22 @@ object Ann {
   def ivfAssign(emb: DataFrame, idCol: String, embCol: String, k: Int): DataFrame =
     ivfIndex(emb, idCol, embCol, k, refineIters = 0)._1
 
-  private final case class IndexKey(sessionUUID: String, semanticHash: Int,
-                                    idCol: String, embCol: String,
-                                    k: Int, refineIters: Int, assignReplicas: Int)
-
-  // small LRU: each value is a MATERIALIZED assignment relation (the
-  // dominant fixed cost of every blocked/probed consumer), so the cache is
-  // deliberately tiny — a pipeline rarely runs more than a few corpora at
-  // once, and eviction only drops a lineage-cut handle, not live state
-  private val indexCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[IndexKey, (DataFrame, DataFrame, DataFrame)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[IndexKey, (DataFrame, DataFrame, DataFrame)]): Boolean =
-        size() > 8
-    })
-
   /** Build-once view of [[ivfIndex]]: memoizes the built (assignments,
-    * centroids) per (session, input PLAN, params), so several queries over
-    * the same embeddings relation — e.g. the q113 blocked dedup and the
-    * q114 blocked top-k in one sweep — share ONE k-means seeding +
-    * assignment instead of each paying the index build, which the sf0.1
-    * crossover analysis measured as the dominant fixed cost (BENCH.md).
-    * The key is the canonicalized logical plan (`semanticHash` +
-    * `sameSemantics` to rule out hash collisions), NOT a data snapshot: if
-    * the files behind the plan are overwritten mid-session, call
-    * [[clearIndexCache]]. Entries hold materialized (lineage-cut)
-    * DataFrames; at most 8 are retained, LRU.
+    * centroids) per (input plan, params), so several queries over the same
+    * embeddings relation — e.g. the q113 blocked dedup and the q114 blocked
+    * top-k in one sweep — share ONE k-means seeding + assignment instead of
+    * each paying the index build, which the sf0.1 crossover analysis
+    * measured as the dominant fixed cost (BENCH.md). Memoized under the
+    * [[graft.Checkpoints]] session-memo contract; entries hold materialized
+    * (lineage-cut) DataFrames.
     */
   def ivfIndexCached(emb: DataFrame, idCol: String, embCol: String,
                      k: Int, refineIters: Int = 1,
-                     assignReplicas: Int = 1): (DataFrame, DataFrame) = {
-    val key = IndexKey(System.identityHashCode(emb.sparkSession).toString,
-      emb.semanticHash(), idCol, embCol, k, refineIters, assignReplicas)
-    val hit = indexCache.get(key)
-    if (hit != null && (hit._1.sparkSession eq emb.sparkSession) &&
-        hit._1.sameSemantics(emb)) (hit._2, hit._3)
-    else {
-      val (assigned, centroids) =
-        ivfIndex(emb, idCol, embCol, k, refineIters, assignReplicas)
-      indexCache.put(key, (emb, assigned, centroids))
-      (assigned, centroids)
+                     assignReplicas: Int = 1): (DataFrame, DataFrame) =
+    graft.Checkpoints.memo(emb.sparkSession,
+        s"ivf|$idCol|$embCol|$k|$refineIters|$assignReplicas", Some(emb)) {
+      ivfIndex(emb, idCol, embCol, k, refineIters, assignReplicas)
     }
-  }
-
-  /** Drop every memoized index (use after overwriting an input table). */
-  def clearIndexCache(): Unit = indexCache.clear()
 
   /** Order-independent corpus fingerprint (count + sum of per-row hash
     * residues over (id, embedding)) for persisted-index validation: one

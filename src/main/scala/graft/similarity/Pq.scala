@@ -82,45 +82,20 @@ object Pq {
     (centroids, assign(subs, centroids))
   }
 
-  private final case class CbKey(sessionUUID: String, semanticHash: Int,
-                                 idCol: String, embCol: String,
-                                 mSub: Int, subDim: Int, k: Int, iters: Int)
-
-  private val cbCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[CbKey, (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[CbKey, (org.apache.spark.sql.DataFrame,
-            org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]): Boolean =
-        size() > 8
-    })
-
   /** Train-once view of [[codebook]] — the [[graft.similarity.Ann
     * .ivfIndexCached]] discipline applied to the PQ side: q172 (codebook
     * audit), q173 (ADC recall) and q188 (IVFPQ) all train over the same
     * embeddings relation, and the 2-round Lloyd fixpoint is their shared
-    * dominant fixed cost. Keyed by (session, canonical plan, params) with
-    * `sameSemantics` confirming the hash; both relations are materialized
-    * (lineage-cut) before caching. Overwrite the input table →
-    * [[clearCodebookCache]].
+    * dominant fixed cost. Memoized per (input plan, params) under the
+    * [[graft.Checkpoints]] session-memo contract; both relations are
+    * materialized (lineage-cut) before they are memoized.
     */
   def codebookCached(emb: DataFrame, idCol: String, embCol: String,
                      mSub: Int = 8, subDim: Int = 8, k: Int = 16,
-                     iters: Int = 2): (DataFrame, DataFrame) = {
-    val key = CbKey(System.identityHashCode(emb.sparkSession).toString,
-      emb.semanticHash(), idCol, embCol, mSub, subDim, k, iters)
-    val hit = cbCache.get(key)
-    if (hit != null && (hit._1.sparkSession eq emb.sparkSession) &&
-        hit._1.sameSemantics(emb)) (hit._2, hit._3)
-    else {
+                     iters: Int = 2): (DataFrame, DataFrame) =
+    graft.Checkpoints.memo(emb.sparkSession,
+        s"pq|$idCol|$embCol|$mSub|$subDim|$k|$iters", Some(emb)) {
       val (centroids, assigned) = codebook(emb, idCol, embCol, mSub, subDim, k, iters)
-      val cM = graft.Checkpoints.materialize(centroids)
-      val aM = graft.Checkpoints.materialize(assigned)
-      cbCache.put(key, (emb, cM, aM))
-      (cM, aM)
+      (graft.Checkpoints.materialize(centroids), graft.Checkpoints.materialize(assigned))
     }
-  }
-
-  /** Drop every memoized codebook (use after overwriting an input table). */
-  def clearCodebookCache(): Unit = cbCache.clear()
 }

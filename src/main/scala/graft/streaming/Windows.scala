@@ -184,6 +184,10 @@ object Windows {
     *     every directory the sink and `finish` wrote under it, is deleted
     *     before `drain` returns. The delete also runs when the writer
     *     throws; the exception propagates.
+    *   - the query's checkpoint is `tmp/_checkpoint`, so that delete also
+    *     removes it after a failure (a query left to Spark's own temporary
+    *     checkpoint keeps it when it fails). Parquet reads skip `_`-prefixed
+    *     names, so a `finish` may read `tmp` as a whole.
     */
   private[streaming] def drain(name: String, feed: DataFrame)(
       writer: String => (Dataset[Row], Long) => Unit)(
@@ -194,6 +198,7 @@ object Windows {
       val q = feed.sparkSession.readStream.schema(feed.schema)
         .option("maxFilesPerTrigger", "1").parquet(graft.Checkpoints.feedDirCached(feed))
         .writeStream.outputMode(OutputMode.Append)
+        .option("checkpointLocation", s"$tmp/_checkpoint")
         .foreachBatch(write)
         .start()
       try q.processAllAvailable() finally q.stop()

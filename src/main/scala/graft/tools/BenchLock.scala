@@ -12,7 +12,7 @@ package graft.tools
   * failing.
   *
   * Two acquisition modes:
-  *   - [[exclusive]] (REFUSE): the Debug* A/B harnesses and Profile — an
+  *   - [[exclusive]] (REFUSE): Profile, a terminal A/B harness — an
   *     operator at a terminal should go look at what's running, not queue
   *     blind behind it;
   *   - [[exclusiveWait]] (BLOCK): the driver-invoked entry points (Bench,

@@ -89,7 +89,7 @@ class JaccardJoinSpec extends SparkSpec {
   }
 
   test("buildIndexCached: one corpus build per (plan, params); results equal cold") {
-    JaccardJoin.clearIndexCache()
+    graft.Checkpoints.clearMaterializeCache()
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val corpus = docs.filter($"source" =!= "src18")
     val delta = docs.filter($"source" === "src18")
@@ -106,7 +106,7 @@ class JaccardJoinSpec extends SparkSpec {
       delta, "doc_id", "text")
       .select($"id1", $"id2", $"inter").as[(Long, Long, Long)].collect().toSet
     assert(cached === cold, "cached index must give the cold build's pairs")
-    JaccardJoin.clearIndexCache()
+    graft.Checkpoints.clearMaterializeCache()
   }
 
   test("incrementalPairs: crafted delta-delta twins are caught, corpus self-pairs are not") {

@@ -307,7 +307,7 @@ class NorthStarSpec extends SparkSpec {
   private def Tables_embeddings = graft.Tables(spark, sf0001, "embeddings")
 
   test("ivfIndexCached: one build per (plan, params) per session") {
-    Ann.clearIndexCache()
+    graft.Checkpoints.clearMaterializeCache()
     val emb = Tables_embeddings
     val (a1, c1) = Ann.ivfIndexCached(emb, "vec_id", "embedding",
       k = 16, refineIters = 1, assignReplicas = 3)
@@ -331,7 +331,7 @@ class NorthStarSpec extends SparkSpec {
     val cached = a2.select("id", "cid", "crank")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(cached === cold, "cached index must equal a cold build bit-for-bit")
-    Ann.clearIndexCache()
+    graft.Checkpoints.clearMaterializeCache()
   }
 
   test("ivfProbe on a prebuilt index equals build-per-call ivfTopK") {
@@ -421,7 +421,7 @@ class NorthStarSpec extends SparkSpec {
     val hits = probes.map(p => (got.getOrElse(p, Set.empty[Long])
       intersect exact.getOrElse(p, Set.empty[Long])).size)
     assert(hits.sum >= 35, s"mild-drift recall ${hits.sum}/50 below floor, per-probe $hits")
-    Ann.clearIndexCache()
+    graft.Checkpoints.clearMaterializeCache()
   }
 
   test("q124 batched-probe recall vs q69's exact multi-probe answers") {
@@ -491,7 +491,7 @@ class NorthStarSpec extends SparkSpec {
       .view.mapValues(_.map(_._2).toSet).toMap
     val hits = exact.keys.toSeq.sorted.map(p => (got(p) intersect exact(p)).size)
     assert(hits.sum >= 30, s"recall ${hits.sum}/50, per-probe $hits")
-    Ann.clearIndexCache()
+    graft.Checkpoints.clearMaterializeCache()
   }
 
   test("persisted IVF index: loaded probe equals fresh probe; corpus drift refuses") {

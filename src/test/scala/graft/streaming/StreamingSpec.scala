@@ -305,6 +305,10 @@ class StreamingSpec extends SparkSpec {
     assert(seen.isEmpty, s"the writer saw an empty batch: $seen")
     tmpGone("a drain of empty batches")
 
+    // a failed query keeps a checkpoint Spark made for it in the temp dir
+    def sparkTemporaries = Option(new java.io.File(System.getProperty("java.io.tmpdir"))
+      .list()).fold(Set.empty[String])(_.filter(_.startsWith("temporary-")).toSet)
+    val temporariesBefore = sparkTemporaries
     tmpSeen = ""
     val boom =intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       Windows.drain("drain_contract", rows.repartition(3, $"k")) { tmp =>
@@ -316,6 +320,8 @@ class StreamingSpec extends SparkSpec {
     assert(Iterator.iterate[Throwable](boom)(_.getCause).takeWhile(_ != null)
       .exists(_.getMessage == "writer failed"), s"writer exception lost: $boom")
     tmpGone("a failed drain")
+    assert(sparkTemporaries -- temporariesBefore === Set.empty[String],
+      "a failed drain left a streaming checkpoint in the temp dir")
   }
 
   test("q152 streaming decontam equals q119's batch answer; sink idempotent under redelivery") {
